@@ -31,15 +31,25 @@ from pyspark.sql import functions as F
 TWO_60 = float(1 << 60)
 
 
-def det_rand(seed: int | str, *key_cols: Column | str) -> Column:
+def hash60(key: Column) -> Column:
+    """The cross-engine 60-bit hash of a key string: the first 15 hex digits
+    of ``md5(key)`` as a non-negative bigint.  Every md5-derived hash in the
+    engine goes through here; callers build their own key string so each
+    expression (and its DuckDB twin) stays exactly as written."""
+    return F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
+
+
+def det_rand(seed: int | str | Column, *key_cols: Column | str) -> Column:
     """Deterministic uniform [0,1) derived from md5(seed, key...).
 
     Unlike ``F.rand(seed)`` this is a pure function of the row key: stable
     across partitioning, task retries, and engines (see module docstring for
-    the DuckDB-oracle equivalent).
+    the DuckDB-oracle equivalent).  ``seed`` may be a column (per-row seeds,
+    e.g. the ensemble's seed dimension).
     """
-    key = F.concat_ws(":", F.lit(str(seed)), *[F.col(c) if isinstance(c, str) else c for c in key_cols])
-    return (F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint") / F.lit(TWO_60)).cast("double")
+    seed_col = seed if isinstance(seed, Column) else F.lit(str(seed))
+    key = F.concat_ws(":", seed_col, *[F.col(c) if isinstance(c, str) else c for c in key_cols])
+    return (hash60(key) / F.lit(TWO_60)).cast("double")
 
 
 def det_shuffle_key(seed: int | str, *key_cols: Column | str) -> Column:

@@ -259,7 +259,7 @@ def ranked_candidates(
     query_attr: str, query_type: str, source_cols: list[tuple[str, str]]
 ) -> list[tuple[str, str]]:
     """Mock-scored candidate list for one target attribute, rank order —
-    the sequential twin of ``mock_score_candidates`` + ``rank_preferences``
+    the sequential twin of ``mock_score_request`` + ``rank_preferences``
     (same integer milli-scores, same desc-score/asc-name tiebreak)."""
 
     def milli(cand: str, cand_type: str) -> int:

@@ -22,7 +22,8 @@ The **mock scorer** implements the same contract deterministically
 integer-scaled to "milli" units so downstream normalization is exact
 cross-engine arithmetic (see functions/determinism.py).  Tests and the
 DuckDB correctness oracle run against the mock; a real backend plugs in by
-passing a different ``score_fn``/``generate_fn`` without touching any plan.
+passing a different request function to :func:`llm_map` without touching
+any plan.
 """
 
 from __future__ import annotations
@@ -84,30 +85,29 @@ def mock_score_milli(query_attr: str, query_type: str, cand_attr: str, cand_type
     return int(round(raw * _SCORE_SCALE))
 
 
-def mock_score_candidates(candidates: DataFrame) -> DataFrame:
-    """Score a candidate frame ``(case_id, side, query_attr, query_type,
-    candidate_attr, candidate_type)`` through the mapInPandas LLM boundary,
-    appending ``score_milli``.  This is the plan-visible external call site —
-    swap the body for a real inference client without changing the plan."""
-    schema = (
-        "case_id string, side string, query_attr string, query_type string, "
-        "candidate_attr string, candidate_type string, score_milli bigint"
-    )
+# Output of a candidate scorer: the candidate frame plus ``score_milli``.
+SCORED_SCHEMA = (
+    "case_id string, side string, query_attr string, query_type string, "
+    "candidate_attr string, candidate_type string, score_milli bigint"
+)
 
-    def batch_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["score_milli"] = [
-                MOCK_NO_MATCH_MILLI
-                if c == "none of the options"
-                else mock_score_milli(q, qt, c, ct)
-                for q, qt, c, ct in zip(
-                    pdf.query_attr, pdf.query_type, pdf.candidate_attr, pdf.candidate_type
-                )
-            ]
-            yield pdf
 
-    return candidates.mapInPandas(batch_fn, schema)
+def mock_score_request(pdf: pd.DataFrame) -> pd.DataFrame:
+    """Request function for :func:`llm_map` scoring one Arrow batch of
+    candidates ``(case_id, side, query_attr, query_type, candidate_attr,
+    candidate_type)``: appends ``score_milli`` (:data:`SCORED_SCHEMA`).
+    Swap it for a real inference client without changing the plan:
+    ``llm_map(candidates, mock_score_request, SCORED_SCHEMA)``."""
+    pdf = pdf.copy()
+    pdf["score_milli"] = [
+        MOCK_NO_MATCH_MILLI
+        if c == "none of the options"
+        else mock_score_milli(q, qt, c, ct)
+        for q, qt, c, ct in zip(
+            pdf.query_attr, pdf.query_type, pdf.candidate_attr, pdf.candidate_type
+        )
+    ]
+    return pdf
 
 
 def llm_map(

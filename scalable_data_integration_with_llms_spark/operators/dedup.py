@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..functions.determinism import hash60
 from ..functions.text import ngram_strings
 
 
@@ -201,38 +202,36 @@ def containment_pairs(
     )
 
 
-def _hash60(*cols: Column) -> Column:
-    """60-bit integer hash of the concatenated key — the cross-engine hash
-    primitive (functions/determinism.py)."""
-    return F.conv(F.substring(F.md5(F.concat_ws(":", *cols)), 1, 15), 16, 10).cast("bigint")
+def minhash_perm_hash(p: int, shingle: Column) -> Column:
+    """Permutation ``p``'s 60-bit hash of a shingle: ``hash60("p:shingle")``.
+    Usable inside a higher-order-function lambda (the streaming banding)."""
+    return hash60(F.concat_ws(":", F.lit(p), shingle))
 
 
-def minhash_signatures(
-    shingles: DataFrame, n_perm: int = 12, n_bands: int = 4
-) -> DataFrame:
-    """MinHash band signatures: (doc, band, signature).
+def minhash_mins(shingles: DataFrame, n_perm: int = 12) -> DataFrame:
+    """(doc, m0..m{n_perm-1}): every permutation's minimum hash per doc.
 
-    Each "permutation" p hashes shingles with a distinct salt; the minimum per
-    (doc, p) is the signature component.  Bands of ``n_perm / n_bands`` rows
-    are collapsed to one md5 signature string, so LSH candidate generation is
-    a single groupBy on (band, signature).
-    """
-    rows_per_band = n_perm // n_bands
-    # All n_perm minima ride ONE hash aggregation as side-by-side columns:
-    # each shingle row evaluates n_perm salted hashes map-side and combines
-    # into per-doc partial minima, so the exchange carries |docs| rows of
-    # n_perm bigints — NOT the n_perm × |shingles| exploded rows of the
-    # row-per-permutation formulation (measured 12x less shuffle volume at
-    # n_perm=12; identical minima, same oracle).
-    mins = shingles.groupBy("doc").agg(
+    All n_perm minima ride ONE hash aggregation as side-by-side columns:
+    each shingle row evaluates n_perm salted hashes map-side and combines
+    into per-doc partial minima, so the exchange carries |docs| rows of
+    n_perm bigints — NOT the n_perm × |shingles| exploded rows of the
+    row-per-permutation formulation (measured 12x less shuffle volume at
+    n_perm=12; identical minima, same oracle)."""
+    return shingles.groupBy("doc").agg(
         *[
-            F.min(_hash60(F.lit(p), F.col("shingle"))).alias(f"m{p}")
+            F.min(minhash_perm_hash(p, F.col("shingle"))).alias(f"m{p}")
             for p in range(n_perm)
         ]
     )
-    # band signature rendered exactly as before: md5("p:minh|p:minh|...")
-    # with p ascending within the band
-    bands = F.array(
+
+
+def minhash_band_array(n_perm: int = 12, n_bands: int = 4) -> Column:
+    """Array of (band, signature) structs over the ``m{p}`` minima columns:
+    band ``b``'s signature is md5("p:min|p:min|...") with p ascending
+    within the band.  The one definition of what an LSH bucket is, shared
+    by the batch operator and the streaming gate."""
+    rows_per_band = n_perm // n_bands
+    return F.array(
         *[
             F.struct(
                 F.lit(b).cast("int").alias("band"),
@@ -251,8 +250,22 @@ def minhash_signatures(
             for b in range(n_bands)
         ]
     )
+
+
+def minhash_signatures(
+    shingles: DataFrame, n_perm: int = 12, n_bands: int = 4
+) -> DataFrame:
+    """MinHash band signatures: (doc, band, signature).
+
+    Each "permutation" p hashes shingles with a distinct salt; the minimum per
+    (doc, p) is the signature component (:func:`minhash_mins`).  Bands of
+    ``n_perm / n_bands`` rows are collapsed to one md5 signature string
+    (:func:`minhash_band_array`), so LSH candidate generation is a single
+    groupBy on (band, signature).
+    """
     return (
-        mins.select("doc", F.explode(bands).alias("bs"))
+        minhash_mins(shingles, n_perm)
+        .select("doc", F.explode(minhash_band_array(n_perm, n_bands)).alias("bs"))
         .select("doc", F.col("bs.band").alias("band"), F.col("bs.signature").alias("signature"))
     )
 
@@ -313,7 +326,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFr
     ships ``bits`` longs per doc, not tokens."""
     tokens = df.select(
         F.col(id_col).alias("doc"), F.explode(F.split(F.col(text_col), " ")).alias("tok")
-    ).withColumn("h", _hash60(F.col("tok")))
+    ).withColumn("h", hash60(F.concat_ws(":", F.col("tok"))))
     bit_sums = tokens.groupBy("doc").agg(
         *[
             F.sum(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)) * 2 - 1).alias(f"b{b}")

@@ -17,16 +17,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.determinism import hash60
 
-def _cms_col(j, key, width: int):
-    """Column index of `key` in sketch row `j`: md5-derived 60-bit hash mod
-    width (non-negative)."""
-    h = F.conv(
-        F.substring(F.md5(F.concat_ws(":", j.cast("string"), key.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
-    return h % width
+
+def hash_position(j: Column, key: Column, width: int) -> Column:
+    """Position of ``key`` under hash number ``j`` in a ``width``-slot row:
+    ``hash60(j:key) % width`` (non-negative).  Shared by the count-min
+    sketch and the md5 Bloom filter (operators/bloom.py)."""
+    return hash60(F.concat_ws(":", j.cast("string"), key.cast("string"))) % width
 
 
 def count_min_cells(
@@ -38,102 +36,9 @@ def count_min_cells(
         "key", "cnt", F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("j")
     )
     return (
-        rows.select("j", _cms_col(F.col("j"), F.col("key"), width).alias("col"), "cnt")
+        rows.select("j", hash_position(F.col("j"), F.col("key"), width).alias("col"), "cnt")
         .groupBy("j", "col")
         .agg(F.sum("cnt").alias("cell"))
-    )
-
-
-def _pow2_literal():
-    """Array literal of the 64 single-bit words (two's-complement for the
-    sign bit) — one object, indexed per row with ``element_at``."""
-    return F.lit(
-        [b - (1 << 64) if (b := 1 << i) >= (1 << 63) else b for i in range(64)]
-    )
-
-
-def bloom_bitmap(build: DataFrame, key_col: str, n_hashes: int = 3, m: int = 4096) -> DataFrame:
-    """The Bloom filter itself, as ONE row holding ``words``: an array of
-    m/64 bigint words with the build keys' md5-derived positions set.
-
-    One bounded aggregation: keys → k positions → per-word BIT_OR (the
-    map-side partial agg collapses every partition to ≤ m/64 rows before
-    the exchange, and BIT_OR is idempotent so duplicate build keys need no
-    pre-``distinct`` — the runtime_filter/F9 discipline), then the ≤ m/64
-    (word, bits) rows fold into a dense array in a single final row.  The
-    row is m/64·8 bytes regardless of corpus size — broadcast it.
-    """
-    pow2 = _pow2_literal()
-    pos = _cms_col(F.col("j"), F.col("key"), m)
-    word_rows = (
-        build.select(F.col(key_col).alias("key"))
-        .select(
-            "key", F.explode(F.sequence(F.lit(0), F.lit(n_hashes - 1))).alias("j")
-        )
-        .select(
-            (pos / 64).cast("int").alias("w"),
-            F.element_at(pow2, F.pmod(pos, F.lit(64)).cast("int") + 1).alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or("b").alias("bits"))
-    )
-    return word_rows.agg(
-        F.map_from_entries(F.collect_list(F.struct("w", "bits"))).alias("wm")
-    ).select(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(m // 64 - 1)),
-            lambda i: F.coalesce(F.element_at(F.col("wm"), i), F.lit(0)),
-        ).alias("words")
-    )
-
-
-def bloom_bits_predicate(key, n_hashes: int = 3, m: int = 4096):
-    """Membership test of ``key`` against a ``words`` bitmap column (from
-    :func:`bloom_bitmap`, attached by a 1-row broadcast cross join): true
-    iff all ``n_hashes`` md5-derived positions are set.  Pure column
-    expression — ``element_at`` + bitwise AND per hash inside whole-stage
-    codegen, no explode, no join, no re-aggregation."""
-    key_col = F.col(key) if isinstance(key, str) else key
-    pow2 = _pow2_literal()
-    pred = None
-    for j in range(n_hashes):
-        pos = _cms_col(F.lit(j), key_col, m)
-        word = F.element_at("words", (pos / 64).cast("int") + 1)
-        bit = F.element_at(pow2, F.pmod(pos, F.lit(64)).cast("int") + 1)
-        term = word.bitwiseAND(bit) != 0
-        pred = term if pred is None else pred & term
-    return pred
-
-
-def bloom_membership(
-    build: DataFrame,
-    probe: DataFrame,
-    key_col: str,
-    n_hashes: int = 3,
-    m: int = 4096,
-) -> DataFrame:
-    """Bloom-filter membership: ``probe`` keys tested against the filter
-    built from ``build`` keys.  Returns (key, in_filter).
-
-    r15 form — bitmap + map-only probe: the build side aggregates into a
-    single m/64-word row (:func:`bloom_bitmap`, bounded by m regardless of
-    corpus size), broadcast onto the distinct probe keys with a 1-row
-    nested-loop join; each key then evaluates all ``n_hashes`` positions as
-    a codegen column predicate (:func:`bloom_bits_predicate`).  The former
-    explode(k)/semi-join/re-aggregate form paid TWO probe-key-sized
-    shuffles (the per-key hit-count groupBy and the join-back onto the
-    distinct keys) that the bitmap removes at any scale; the one remaining
-    probe-side exchange is the ``distinct`` itself.
-    """
-    bitmap = bloom_bitmap(build, key_col, n_hashes=n_hashes, m=m)
-    return (
-        probe.select(F.col(key_col).alias("key"))
-        .distinct()
-        .join(F.broadcast(bitmap))
-        .select(
-            "key",
-            bloom_bits_predicate("key", n_hashes=n_hashes, m=m).alias("in_filter"),
-        )
     )
 
 
@@ -151,7 +56,9 @@ def cms_estimates(
         "key",
         "exact_cnt",
         F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("j"),
-    ).select("key", "exact_cnt", "j", _cms_col(F.col("j"), F.col("key"), width).alias("col"))
+    ).select(
+        "key", "exact_cnt", "j", hash_position(F.col("j"), F.col("key"), width).alias("col")
+    )
     return (
         probes.join(F.broadcast(cells), ["j", "col"])
         .groupBy("key", "exact_cnt")
@@ -208,17 +115,7 @@ def kmv_k_mins(
         *group_cols,
         "_kmv_key",
         *carry,
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(salt), F.col("_kmv_key").cast("string"))),
-                1,
-                15,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("h"),
+        hash60(F.concat_ws(":", F.lit(salt), F.col("_kmv_key").cast("string"))).alias("h"),
     )
     cnt = hashed.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("exact_distinct")

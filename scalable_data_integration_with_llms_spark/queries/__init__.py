@@ -33,70 +33,93 @@ from . import ehr_q  # noqa: F401, E402
 from . import sinks_q  # noqa: F401, E402
 from . import llm_q  # noqa: F401, E402
 
-# Verification-window priority (r15 rotation, regenerated by
-# ``tools/rotate_window.py`` AFTER the round's changes landed): (a) the 13
-# queries whose physical plan or execution structure changed this round —
-# the bloom bitmap rewrite (q_bloom_contamination), the LSH two-stage pair
-# expansion (q_lsh_verified_pairs), the connected-components lazy-
-# checkpoint fold and its consumers (q_dedup_clusters, q_dedup_keepers,
-# q_er_entities, q_embedding_dup_clusters), the thread-pooled sink applies
-# (q_exactly_once_sink, q_sink_compaction), the spread_stream feeds
-# (q_stream_topk_types, q_stream_near_dup_gate), and the three measured
-# keep-decisions whose docstrings changed (q_minhash_est_jaccard,
-# q_stream_stream_join, q_pmi_collocations); (b) the stalest rows —
-# r9-latest then the r10-latest block.  Oldest standing driver
-# verification after this round: r10.
+# Verification-window priority (regenerated by ``tools/rotate_window.py``
+# AFTER this round's changes landed).  The changed block is derived
+# mechanically, not from memory: every package function whose code differs
+# from the parent commit (AST compare, docstrings ignored), then every
+# registry query whose build calls one of them (per-query call trace at
+# sf0.01, memos cleared between queries).  This round that is the
+# hashing-layer unification (hash60, the shared MinHash helpers, the one
+# Bloom filter), the count-free transactional sink and the mock scorer
+# running through llm_map: 66 traced queries, in registry order, plus
+# q_stream_near_dup_gate_tws, which calls stream_minhash_bands but
+# registers only where the TWS runtime exists.  The block exceeds the
+# 50-query driver window, so no stale rows ride this round; oldest
+# standing driver verification stays r10.
 _VERIFY_FIRST = [
     "q_bloom_contamination",  # changed/new
     "q_lsh_verified_pairs",  # changed/new
-    "q_dedup_clusters",  # changed/new
-    "q_dedup_keepers",  # changed/new
-    "q_er_entities",  # changed/new
-    "q_embedding_dup_clusters",  # changed/new
     "q_exactly_once_sink",  # changed/new
     "q_sink_compaction",  # changed/new
-    "q_stream_topk_types",  # changed/new
     "q_stream_near_dup_gate",  # changed/new
+    "q_stream_near_dup_gate_tws",  # changed/new
     "q_minhash_est_jaccard",  # changed/new
-    "q_stream_stream_join",  # changed/new
-    "q_pmi_collocations",  # changed/new
-    "q_value_outliers",  # r9-latest
-    "q_zorder_locality",  # r9-latest
-    "q10_returned_revenue",  # r10-latest
-    "q11_important_types",  # r10-latest
-    "q13_order_distribution",  # r10-latest
-    "q14_promo_share",  # r10-latest
-    "q15_top_supplier",  # r10-latest
-    "q16_supplier_part_counts",  # r10-latest
-    "q17_small_quantity_revenue",  # r10-latest
-    "q18_large_orders",  # r10-latest
-    "q19_disjunctive_filter",  # r10-latest
-    "q1_pricing_summary",  # r10-latest
-    "q20_heavy_shippers",  # r10-latest
-    "q21_sole_failing_supplier",  # r10-latest
-    "q22_idle_rich_customers",  # r10-latest
-    "q2_min_cost_part",  # r10-latest
-    "q3_shipping_priority",  # r10-latest
-    "q4_priority_exists",  # r10-latest
-    "q5_region_revenue",  # r10-latest
-    "q6_forecast_revenue",  # r10-latest
-    "q7_volume_shipping",  # r10-latest
-    "q8_market_share",  # r10-latest
-    "q9_profit",  # r10-latest
-    "q_above_avg_orders",  # r10-latest
-    "q_asof_latest_order",  # r10-latest
-    "q_asof_next_order",  # r10-latest
-    "q_big_spenders",  # r10-latest
-    "q_concat_chunk_bins",  # r10-latest
-    "q_confidence_eval",  # r10-latest
-    "q_confidence_summary",  # r10-latest
-    "q_cross_source_dup_matrix",  # r10-latest
-    "q_customers_without_orders",  # r10-latest
-    "q_example_selector_coverage",  # r10-latest
-    "q_example_selector_random",  # r10-latest
-    "q_generate_questions_record",  # r10-latest
-    "q_icl_prompt_render",  # r10-latest
-    "q_image_dhash_dedup",  # r10-latest
+    "q_confidence_eval",  # changed/new
+    "q_confidence_summary",  # changed/new
+    "q_example_selector_coverage",  # changed/new
+    "q_example_selector_random",  # changed/new
+    "q_weighted_sample",  # changed/new
+    "q_cms_supplier_counts",  # changed/new
+    "q_stratified_sample",  # changed/new
+    "q_bloom_join_pushdown",  # changed/new
+    "q_mock_match_scores",  # changed/new
+    "q_bidirectional_scores",  # changed/new
+    "q_topk_alignments",  # changed/new
+    "q_ensemble_union",  # changed/new
+    "q_ensemble_intersection",  # changed/new
+    "q_ensemble_majority",  # changed/new
+    "q_stable_matching",  # changed/new
+    "q_match_round2",  # changed/new
+    "q_ensemble_gold_filter",  # changed/new
+    "q_filtered_preferences",  # changed/new
+    "q_stable_matching_dist",  # changed/new
+    "q_alignment_prf1",  # changed/new
+    "q_mrr",  # changed/new
+    "q_metric_ci",  # changed/new
+    "q_coverage",  # changed/new
+    "q_metrics_by_category",  # changed/new
+    "q_pipeline_e2e",  # changed/new
+    "q_minhash_signatures",  # changed/new
+    "q_simhash",  # changed/new
+    "q_simhash_near_dup",  # changed/new
+    "q_semdedup_scaled",  # changed/new
+    "q_stream_kmv_distinct",  # changed/new
+    "q_example_selection",  # changed/new
+    "q_example_selection_scalable",  # changed/new
+    "q_gold_in_options",  # changed/new
+    "q_softmax_scores",  # changed/new
+    "q_prompt_assembly",  # changed/new
+    "q_chat_prompt",  # changed/new
+    "q_ensemble_disjoint",  # changed/new
+    "q_topk_sweep",  # changed/new
+    "q_kmv_distinct",  # changed/new
+    "q_kmv_set_ops",  # changed/new
+    "q_shard_assignment",  # changed/new
+    "q_corpus_pipeline_e2e",  # changed/new
+    "q_domain_affinity",  # changed/new
+    "q_train_val_split",  # changed/new
+    "q_repr_scoring_prompts",  # changed/new
+    "q_mm_prompts",  # changed/new
+    "q_mapping_sample_data_hint",  # changed/new
+    "q_repr_prompt_tokens",  # changed/new
+    "q_ehr_round1_matches",  # changed/new
+    "q_ehr_matching_f1",  # changed/new
+    "q_synthea_round1_matches",  # changed/new
+    "q_synthea_matching_f1",  # changed/new
+    "q_ehr_rounds",  # changed/new
+    "q_ehr_round2_matches",  # changed/new
+    "q_ehr_bidirectional_scores",  # changed/new
+    "q_ehr_topk_sweep",  # changed/new
+    "q_ehr_bidirectional_f1",  # changed/new
+    "q_ehr_ensemble_f1",  # changed/new
+    "q_real_benchmarks_summary",  # changed/new
+    "q_ehr_effort_report",  # changed/new
+]
+
+
+# the TWS queries register only where their runtime exists
+_VERIFY_FIRST = [
+    n for n in _VERIFY_FIRST if n in QUERIES or n not in streaming_q.TWS_QUERIES
 ]
 
 

@@ -978,10 +978,10 @@ def q_corr_qty_price(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -- Bloom runtime-filter join pushdown --------------------------------------
 # Revenue of URGENT orders by month, with the lineitem scan pre-pruned by a
-# Bloom filter built over the filtered orders' keys (operators/
-# runtime_filter.py): the membership predicate sits in the fact's scan
+# Bloom filter built over the filtered orders' keys (operators/bloom.py,
+# driver-collected words): the membership predicate sits in the fact's scan
 # stage BELOW the join Exchange, so only ~1/5th of lineitem rows shuffle.
-# The bitmap is 4 KiB regardless of scale — this is the join-pruning
+# The bitmap is 16 KiB regardless of scale — this is the join-pruning
 # pattern that survives when the dimension's key set itself is too big to
 # broadcast.  The oracle is the PLAIN join: the Bloom can only pass extra
 # rows and the exact join drops them, so results are identical by
@@ -999,14 +999,15 @@ GROUP BY 1
 
 @query("q_bloom_join_pushdown", _BLOOM_JOIN_ORACLE)
 def q_bloom_join_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.runtime_filter import bloom_probe_predicate, build_bloom_words
+    from ..operators.bloom import BloomSpec, collect_words, contains
 
     o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
     li = load_table(spark, sf_dir, "lineitem")
-    words = build_bloom_words(o, "o_orderkey")
-    pruned = li.filter(bloom_probe_predicate(words, "l_orderkey"))
+    spec = BloomSpec(m=1 << 17, hash="xxhash64")
+    words = collect_words(spec, o, "o_orderkey")
+    pruned = li.filter(contains(spec, F.lit(words), "l_orderkey"))
     joined = pruned.join(o, pruned.l_orderkey == o.o_orderkey)
     return joined.groupBy(
         F.trunc("o_orderdate", "month").alias("order_month")

@@ -515,7 +515,7 @@ def q_minhash_est_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_perm choice (the dedup analog of q_ann_recall's n_planes tuning).
     Exact integer minhashes in both engines make the estimate itself
     oracle-checked."""
-    from ..operators.dedup import _hash60, jaccard_pairs, word_shingles
+    from ..operators.dedup import jaccard_pairs, minhash_mins, word_shingles
 
     d = load_table(spark, sf_dir, "documents")
     sh = scoped_persist(word_shingles(d, "doc_id", "text", n=3), eager=True)
@@ -535,15 +535,7 @@ def q_minhash_est_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial_min — md5 recompute is shuffle-free map work.  Interleaved
     # fresh-process x3 at sf0.1: recompute 3.63/3.32/3.34 s best vs
     # distinct+join-back 5.24/5.46/4.88 s.
-    mins = scoped_persist(
-        sh.groupBy("doc").agg(
-            *[
-                F.min(_hash60(F.lit(p), F.col("shingle"))).alias(f"m{p}")
-                for p in range(12)
-            ]
-        ),
-        eager=True,
-    )
+    mins = scoped_persist(minhash_mins(sh, 12), eager=True)
     ma = mins.select(
         F.col("doc").alias("doc_a"), *[F.col(f"m{p}").alias(f"a{p}") for p in range(12)]
     )

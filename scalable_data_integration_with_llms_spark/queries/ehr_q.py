@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import SessionMemo
-from ..llm.boundary import mock_score_candidates
+from ..functions.determinism import det_rand
+from ..llm.boundary import SCORED_SCHEMA, llm_map, mock_score_request
 from ..operators.candidates import generate_candidates, rank_preferences
 from ..operators.metrics import confusion_counts, prf1_columns
 from ..operators.stable_matching import round_r, stable_match
@@ -119,7 +120,7 @@ def _preferences(
         cands = generate_candidates(catalog)
         if scorer_partitions is not None:
             cands = cands.coalesce(scorer_partitions)
-        ranked = rank_preferences(mock_score_candidates(cands))
+        ranked = rank_preferences(llm_map(cands, mock_score_request, SCORED_SCHEMA))
         if output_partitions is not None:
             ranked = ranked.coalesce(output_partitions)
         return ranked
@@ -512,7 +513,7 @@ def q_ehr_ensemble_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     parsed catalog — no pinned golden anywhere in this check."""
     from ..operators.candidates import NO_MATCH
     from ..operators.ensembles import ensemble_majority
-    from .matching import ENSEMBLE_SEEDS, det_rand_str
+    from .matching import ENSEMBLE_SEEDS
 
     prefs = _preferences(spark, "ehr").filter(
         (F.col("side") == "n_to_one") & (F.col("candidate_attr") != NO_MATCH)
@@ -521,7 +522,7 @@ def q_ehr_ensemble_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     perturbed = prefs.crossJoin(F.broadcast(seeds)).filter(
-        det_rand_str("seed", "case_id", "query_attr", "candidate_attr") >= 0.15
+        det_rand(F.col("seed"), "case_id", "query_attr", "candidate_attr") >= 0.15
     )
     win = W.partitionBy("seed", "case_id", "query_attr").orderBy(
         F.desc("score_milli"), F.asc("candidate_attr")

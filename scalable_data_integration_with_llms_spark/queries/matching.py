@@ -18,7 +18,8 @@ from pyspark.sql import functions as F
 
 from ..caching import SessionMemo
 from ..catalog.cases import case_catalog_df, cases_values_sql, gold_values_sql
-from ..llm.boundary import mock_score_candidates
+from ..functions.determinism import det_rand
+from ..llm.boundary import SCORED_SCHEMA, llm_map, mock_score_request
 from ..operators.candidates import (
     NO_MATCH,
     bidirectional_merge,
@@ -118,7 +119,8 @@ def _spark_preferences(spark: SparkSession) -> DataFrame:
         # beats spinning a worker per partition; coalesce again after the
         # ranking shuffle so every consumer schedules few tasks
         cands = generate_candidates(case_catalog_df(spark)).coalesce(1)
-        return rank_preferences(mock_score_candidates(cands)).coalesce(4)
+        scored = llm_map(cands, mock_score_request, SCORED_SCHEMA)
+        return rank_preferences(scored).coalesce(4)
 
     return _PREFS_MEMO.get_or_build(spark, build)
 
@@ -227,7 +229,7 @@ def _spark_runs(spark: SparkSession) -> DataFrame:
             )
             .crossJoin(F.broadcast(seeds))
             .filter(
-                det_rand_str("seed", "case_id", "query_attr", "candidate_attr") >= 0.15
+                det_rand(F.col("seed"), "case_id", "query_attr", "candidate_attr") >= 0.15
             )
         )
         win = W.partitionBy("seed", "case_id", "query_attr").orderBy(
@@ -246,16 +248,6 @@ def _spark_runs(spark: SparkSession) -> DataFrame:
         )
 
     return _RUNS_MEMO.get_or_build(spark, build)
-
-
-def det_rand_str(seed_col: str, *key_cols: str):
-    """det_rand variant where the seed is a column, matching the oracle's
-    ``seed || ':' || ...`` key layout."""
-    key = F.concat_ws(":", F.col(seed_col), *[F.col(c) for c in key_cols])
-    return (
-        F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("bigint")
-        / F.lit(1152921504606846976.0)
-    ).cast("double")
 
 
 _UNION_ORACLE = _runs_cte() + "SELECT DISTINCT case_id, src, tgt FROM runs"

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.determinism import hash60
 from ..sources.readers import load_table
 from .registry import query
 
@@ -195,11 +196,7 @@ FROM documents GROUP BY 1
 @query("q_shard_assignment", _SHARD_ORACLE)
 def q_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
-    shard = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("shard42:"), F.col("doc_id"))), 1, 15), 16, 10)
-        .cast("bigint")
-        % _N_SHARDS
-    )
+    shard = hash60(F.concat(F.lit("shard42:"), F.col("doc_id"))) % _N_SHARDS
     return (
         d.select(shard.alias("shard"), "doc_id", F.size(F.split("text", " ", -1)).alias("tok"))
         .groupBy("shard")
@@ -290,11 +287,7 @@ def q_corpus_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("first_id")
     )
     with_tokens = keepers.withColumn("bpe_tokens", bpe_token_count_udf(MERGES)("text"))
-    shard = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("shard42:"), F.col("doc_id"))), 1, 15), 16, 10)
-        .cast("bigint")
-        % _E2E_N_SHARDS
-    )
+    shard = hash60(F.concat(F.lit("shard42:"), F.col("doc_id"))) % _E2E_N_SHARDS
     return (
         with_tokens.select(
             F.col("predicted").alias("lang"), shard.alias("shard"), "bpe_tokens"

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
+from ..functions.determinism import hash60
 from ..operators.similarity import cosine_topk, ivf_topk
 from ..sources.readers import load_table
 from .registry import query
@@ -1008,14 +1009,7 @@ def q_semdedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     sub_col = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("sd12:"), F.col("vec_id").cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % F.col("nb")
+        hash60(F.concat(F.lit("sd12:"), F.col("vec_id").cast("string"))) % F.col("nb")
     )
     withv = scoped_persist(
         assigned.join(F.broadcast(nb), "cluster")

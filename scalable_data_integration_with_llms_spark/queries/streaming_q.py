@@ -151,6 +151,11 @@ def _has_tws_runtime() -> bool:
         return False
 
 
+# Registered only where the TWS runtime exists; the verification window
+# (queries/__init__.py) names them and drops them where they are absent.
+TWS_QUERIES = ("q_sessionization_tws", "q_stream_near_dup_gate_tws")
+
+
 def _register_tws() -> None:
     query("q_sessionization_tws", _CLOSED_SESSIONS_ORACLE)(q_sessionization_tws)
     query("q_stream_near_dup_gate_tws", _NEAR_DUP_GATE_ORACLE)(
@@ -823,12 +828,12 @@ def q_exactly_once_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist EAGERLY, then OVERLAP the 4 applies (guide §2.6): each batch
     # writes its own partition dir and commits its own marker, so the
     # commit protocol is batch-independent by construction and the 4
-    # count+write action pairs can run as concurrent jobs — the scheduler
-    # back-fills each job's straggler tail with the next job's tasks,
-    # collapsing 8 sequential ~0.1–0.3 s actions (the job-latency floor)
-    # into ~2 concurrent waves.  Eager matters here: 4 threads taking
-    # their FIRST action on a lazily-persisted frame would each recompute
-    # the scan+md5 bucket (caching.scoped_persist note).
+    # write actions can run as concurrent jobs — the scheduler back-fills
+    # each job's straggler tail with the next job's tasks, overlapping 4
+    # sequential ~0.1–0.3 s actions (the job-latency floor).  Eager
+    # matters here: 4 threads taking their FIRST action on a lazily-
+    # persisted frame would each recompute the scan+md5 bucket
+    # (caching.scoped_persist note).
     from concurrent.futures import ThreadPoolExecutor
 
     batched = scoped_persist(events.withColumn("__b", bucket), eager=True)
@@ -884,8 +889,8 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # eager persist + thread-pool applies — same rationale as
     # q_exactly_once_sink: batches are commit-independent, so their
-    # count+write actions overlap instead of paying 8 sequential job
-    # latencies (guide §2.6)
+    # write actions overlap instead of paying 4 sequential job latencies
+    # (guide §2.6)
     from concurrent.futures import ThreadPoolExecutor
 
     batched = scoped_persist(events.withColumn("__b", bucket), eager=True)

@@ -520,12 +520,13 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter benchmark contamination with exact FP accounting: each
     corpus doc reports its distinct shingles, Bloom hits, true hits, and
     false positives.  The filter is one m/64-word row bounded by m
-    regardless of corpus size (operators/sketch.bloom_bitmap); the
-    exact-join twin (q_contamination) stays the ground truth.
+    regardless of corpus size (operators/bloom.bitmap, md5 positions so
+    the oracle recomputes them exactly); the exact-join twin
+    (q_contamination) stays the ground truth.
 
     r15: the membership verdict is a map-only codegen predicate per corpus
-    row against the broadcast bitmap (bloom_bits_predicate) instead of the
-    former distinct-shingle explode/semi-join/re-aggregate/join-back —
+    row against the broadcast bitmap (operators/bloom.contains) instead of
+    the former distinct-shingle explode/semi-join/re-aggregate/join-back —
     that form paid three corpus-shingle-sized exchanges (the probe
     distinct, the per-key hit-count groupBy, and the member join) which
     the bitmap probe removes at any scale; recomputing k md5s per (doc,
@@ -534,7 +535,7 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.67/1.85 s vs distinct+join-back (same bitmap) 1.71–2.06/2.36–2.62 s
     vs the r14 explode/semi-join form 3.15/3.65 s — the recompute wins
     locally AND carries fewer exchanges."""
-    from ..operators.sketch import bloom_bits_predicate, bloom_bitmap
+    from ..operators.bloom import BloomSpec, bitmap, contains
 
     d = spread_scan(load_table(spark, sf_dir, "documents"))
     words = F.split("text", " ")
@@ -553,13 +554,10 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     bench = shingled.filter(F.col("doc_id") % 100 == 0).select("shingle").distinct()
     corpus = shingled.filter(F.col("doc_id") % 100 != 0)
-    bitmap = bloom_bitmap(bench, "shingle", n_hashes=_BLOOM_K, m=_BLOOM_M)
+    spec = BloomSpec(m=_BLOOM_M, hash="md5", k=_BLOOM_K)
     flagged = (
-        corpus.crossJoin(F.broadcast(bitmap))
-        .withColumn(
-            "in_filter",
-            bloom_bits_predicate("shingle", n_hashes=_BLOOM_K, m=_BLOOM_M),
-        )
+        corpus.crossJoin(F.broadcast(bitmap(spec, bench, "shingle")))
+        .withColumn("in_filter", contains(spec, F.col("words"), "shingle"))
         .join(
             F.broadcast(bench.withColumn("is_true", F.lit(1))), "shingle", "left"
         )

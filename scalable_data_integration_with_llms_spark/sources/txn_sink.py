@@ -90,11 +90,10 @@ class TxnParquetSink:
         # overwrite, not append: a torn previous attempt may have left
         # orphan files in this partition; the retry must replace them, or
         # the eventual commit would expose duplicates
-        n_rows = batch_df.count()
         batch_df.write.mode("overwrite").parquet(part_dir)
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump({"batch_id": int(batch_id), "n_rows": n_rows}, fh)
+            json.dump({"batch_id": int(batch_id)}, fh)
         os.rename(tmp, marker)  # the commit point — atomic
         return True
 
@@ -127,14 +126,11 @@ class TxnParquetSink:
         if target_partitions:
             snap = snap.repartition(target_partitions)
         part_dir = os.path.join(self.data_dir, f"batch_id={new_id}")
-        n_rows = snap.count()
         snap.write.mode("overwrite").parquet(part_dir)
         marker = self._marker(new_id)
         tmp = marker + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump(
-                {"batch_id": new_id, "n_rows": n_rows, "supersedes": ids}, fh
-            )
+            json.dump({"batch_id": new_id, "supersedes": ids}, fh)
         os.rename(tmp, marker)  # atomic: old generation visible until here
         return new_id
 

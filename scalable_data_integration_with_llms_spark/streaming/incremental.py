@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..llm.boundary import mock_score_candidates
+from ..llm.boundary import SCORED_SCHEMA, llm_map, mock_score_request
 from ..operators.candidates import generate_candidates, rank_preferences
 from ..operators.stable_matching import stable_match
 
@@ -33,7 +33,8 @@ def match_batch(catalog_batch: DataFrame, top_k: int = 3) -> DataFrame:
     ``coalesce(1)`` here — fine for the few-hundred-row static case set —
     would serialize the whole batch through one task at scale)."""
     cands = generate_candidates(catalog_batch).repartition("case_id")
-    prefs = rank_preferences(mock_score_candidates(cands)).persist()
+    scored = llm_map(cands, mock_score_request, SCORED_SCHEMA)
+    prefs = rank_preferences(scored).persist()
     try:
         return stable_match(prefs, top_k=top_k)
     finally:

@@ -48,6 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.determinism import hash60
 from ..operators.sketch import KMV_K
 
 KMV_GATE_OUT_SCHEMA = "event_type string, shard int, mins array<bigint>"
@@ -99,10 +100,4 @@ def kmv_distinct_gate(hashed: DataFrame) -> DataFrame:
 def kmv_stream_hash(col: str) -> Column:
     """The batch sketch's exact hash bytes (operators/sketch.py:kmv_k_mins,
     salt 'kmv') as a streaming-safe map-only expression."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit("kmv"), F.col(col).cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    return hash60(F.concat_ws(":", F.lit("kmv"), F.col(col).cast("string")))

@@ -60,20 +60,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..functions.text import ngram_strings
+from ..operators.dedup import minhash_band_array, minhash_perm_hash
 
 N_PERM = 12
 N_BANDS = 4
 
 GATE_OUT_SCHEMA = "doc bigint, band int, is_dup boolean"
 _GATE_STATE_SCHEMA = "min_doc bigint"
-
-
-def _hash60(p: int, s):
-    """The cross-engine 60-bit hash (operators/dedup.py:_hash60) as an
-    expression usable inside a higher-order-function lambda."""
-    return F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.lit(p), s)), 1, 15), 16, 10
-    ).cast("bigint")
 
 
 def stream_minhash_bands(
@@ -91,7 +84,7 @@ def stream_minhash_bands(
     ws = F.split("text", " ", -1)
 
     def perm_min(p: int):
-        return F.array_min(F.transform(F.col("grams"), lambda s: _hash60(p, s)))
+        return F.array_min(F.transform(F.col("grams"), lambda s: minhash_perm_hash(p, s)))
 
     # Build the gram array ONCE in its own projection: inlining it into the
     # n_perm hash expressions re-ran the gram construction once per
@@ -107,27 +100,9 @@ def stream_minhash_bands(
         .select("doc", F.array_distinct(ngram_strings(F.col("ws"), 3)).alias("grams"))
         .select("doc", *[perm_min(p).alias(f"m{p}") for p in range(n_perm)])
     )
-    rpb = n_perm // n_bands
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("int").alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.concat_ws(":", F.lit(p), F.col(f"m{p}"))
-                            for p in range(b * rpb, (b + 1) * rpb)
-                        ],
-                    )
-                ).alias("signature"),
-            )
-            for b in range(n_bands)
-        ]
-    )
-    return mins.select("doc", F.explode(bands).alias("bs")).select(
-        "doc", "bs.band", "bs.signature"
-    )
+    return mins.select(
+        "doc", F.explode(minhash_band_array(n_perm, n_bands)).alias("bs")
+    ).select("doc", "bs.band", "bs.signature")
 
 
 def _gate(

@@ -6,23 +6,48 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import assert_oracle_match
+from scalable_data_integration_with_llms_spark.operators.bloom import (
+    MAX_M,
+    BloomSpec,
+    bitmap,
+    contains,
+)
 
 SF_DIR = os.environ.get("SDI_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def test_bloom_no_false_negatives(spark):
-    from scalable_data_integration_with_llms_spark.operators.sketch import bloom_membership
-
+@pytest.mark.parametrize("hash_name", ["md5", "xxhash64"])
+def test_bloom_no_false_negatives(spark, hash_name):
+    spec = BloomSpec(m=4096, hash=hash_name)
     build = spark.createDataFrame([(f"key{i}",) for i in range(50)], "k string")
     probe = spark.createDataFrame(
         [(f"key{i}",) for i in range(0, 100)], "k string"  # first 50 are members
     )
-    got = {r["key"]: r["in_filter"] for r in bloom_membership(build, probe, "k").collect()}
+    flagged = probe.crossJoin(F.broadcast(bitmap(spec, build, "k"))).select(
+        "k", contains(spec, F.col("words"), "k").alias("in_filter")
+    )
+    got = {r["k"]: r["in_filter"] for r in flagged.collect()}
     assert all(got[f"key{i}"] for i in range(50))  # Bloom guarantee
     assert len(got) == 100
+
+
+@pytest.mark.parametrize(
+    "kwargs",
+    [
+        dict(m=100, hash="md5"),  # not a whole number of 64-bit words
+        dict(m=MAX_M + 64, hash="md5"),  # above the stated ceiling
+        dict(m=4096, hash="md5", k=0),
+        dict(m=4096, hash="crc32"),
+    ],
+    ids=["m_not_word_multiple", "m_above_ceiling", "k_zero", "unknown_hash"],
+)
+def test_bloom_spec_rejects_invalid(kwargs):
+    with pytest.raises(ValueError):
+        BloomSpec(**kwargs)
 
 
 def test_bloom_contamination_accounting(spark):

@@ -114,7 +114,11 @@ def test_full_pipeline_on_real_ehr(spark):
     stable matching → round-1 extraction → PRF1 vs the real gold pairs.
     The lexical mock scores what an LLM would; the engine around it is the
     part under test — 52 cases, deterministic metrics, twice."""
-    from scalable_data_integration_with_llms_spark.llm.boundary import mock_score_candidates
+    from scalable_data_integration_with_llms_spark.llm.boundary import (
+        SCORED_SCHEMA,
+        llm_map,
+        mock_score_request,
+    )
     from scalable_data_integration_with_llms_spark.operators.candidates import (
         generate_candidates,
         rank_preferences,
@@ -132,7 +136,7 @@ def test_full_pipeline_on_real_ehr(spark):
         cases = load_dataset_json(spark, EHR)
         cat = catalog_from_cases(cases)
         cands = generate_candidates(cat.select("case_id", "side", "col_name", "col_type"))
-        prefs = rank_preferences(mock_score_candidates(cands))
+        prefs = rank_preferences(llm_map(cands, mock_score_request, SCORED_SCHEMA))
         matches = round_r(stable_match(prefs, top_k=5), 1)
         gold = cases.select(
             F.col("id").alias("case_id"), F.explode("gold_mapping").alias("p")

@@ -199,9 +199,10 @@ def test_bloom_runtime_filter_prunes_and_preserves(spark, duck):
     """The Bloom predicate must (a) never drop a matching row, (b) prune a
     large share of the fact scan, and (c) sit in the scan stage below the
     join exchange."""
-    from scalable_data_integration_with_llms_spark.operators.runtime_filter import (
-        bloom_probe_predicate,
-        build_bloom_words,
+    from scalable_data_integration_with_llms_spark.operators.bloom import (
+        BloomSpec,
+        collect_words,
+        contains,
     )
     from scalable_data_integration_with_llms_spark.queries import QUERIES
     from scalable_data_integration_with_llms_spark.sources.readers import load_table
@@ -209,8 +210,9 @@ def test_bloom_runtime_filter_prunes_and_preserves(spark, duck):
     sf = "/root/testdata/sf0.001"
     o = load_table(spark, sf, "orders").filter(F.col("o_orderpriority") == "1-URGENT")
     li = load_table(spark, sf, "lineitem")
-    words = build_bloom_words(o, "o_orderkey")
-    pruned = li.filter(bloom_probe_predicate(words, "l_orderkey"))
+    spec = BloomSpec(m=1 << 17, hash="xxhash64")
+    words = collect_words(spec, o, "o_orderkey")
+    pruned = li.filter(contains(spec, F.lit(words), "l_orderkey"))
     n_li, n_pruned = li.count(), pruned.count()
     n_match = li.join(o, li.l_orderkey == o.o_orderkey, "left_semi").count()
     assert n_match <= n_pruned < n_li * 0.6  # superset of matches, real pruning
@@ -232,24 +234,26 @@ def test_bloom_filter_type_mismatch_keeps_matches(spark):
     every matching row.  Without canonicalizing the hash input, xxhash64
     hashes int and bigint differently and silently drops matches (r3/r4
     ADVICE hazard)."""
-    from scalable_data_integration_with_llms_spark.operators.runtime_filter import (
-        bloom_probe_predicate,
-        build_bloom_words,
+    from scalable_data_integration_with_llms_spark.operators.bloom import (
+        BloomSpec,
+        collect_words,
+        contains,
     )
 
+    spec = BloomSpec(m=1 << 17, hash="xxhash64")
     build = spark.range(0, 500).select(F.col("id").cast("int").alias("k"))
     probe = spark.range(0, 2000).select(F.col("id").alias("k"))  # bigint
-    words = build_bloom_words(build, "k")
-    kept = {r.k for r in probe.filter(bloom_probe_predicate(words, "k")).collect()}
+    words = collect_words(spec, build, "k")
+    kept = {r.k for r in probe.filter(contains(spec, F.lit(words), "k")).collect()}
     assert set(range(500)) <= kept  # no matching row dropped
 
     # string build keys vs string probe keys still behave
     sbuild = build.select(F.col("k").cast("string").alias("k"))
-    swords = build_bloom_words(sbuild, "k")
+    swords = collect_words(spec, sbuild, "k")
     skept = {
         r.k
         for r in probe.select(F.col("k").cast("string").alias("k"))
-        .filter(bloom_probe_predicate(swords, "k"))
+        .filter(contains(spec, F.lit(swords), "k"))
         .collect()
     }
     assert {str(i) for i in range(500)} <= skept

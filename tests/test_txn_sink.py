@@ -52,6 +52,23 @@ def test_marker_write_is_atomic(spark, tmp_path):
     assert sink.committed_ids() == [3]
 
 
+def test_apply_evaluates_batch_once(spark, tmp_path):
+    # a foreachBatch frame is usually a whole streaming plan: apply() must
+    # run it once (the write), not once more for a row count
+    rows_seen = spark.sparkContext.accumulator(0)
+
+    def counting(batches):
+        for pdf in batches:
+            rows_seen.add(len(pdf))
+            yield pdf
+
+    df = _mk(spark, [(1, "a"), (2, "b"), (3, "c")]).mapInPandas(counting, "k int, v string")
+    sink = TxnParquetSink(str(tmp_path / "t"))
+    assert sink.apply(df, 0) is True
+    assert rows_seen.value == 3
+    assert sink.snapshot(spark).count() == 3
+
+
 def test_latest_by_key_upsert_view(spark, tmp_path):
     sink = TxnParquetSink(str(tmp_path / "t"))
     sink.apply(

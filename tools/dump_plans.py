@@ -1,17 +1,29 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for representative queries
-with the scale rationale for each — the '.explain and iterate' audit trail
-(SURVEY §4, SCALE.md).  Run from the repo root:
+"""Physical-plan dumps.  Run from the repo root:
 
     python tools/dump_plans.py > PLANS.md
+    python tools/dump_plans.py --round N before|after q_a q_b ...
+
+The first form regenerates PLANS.md: physical plans for representative
+queries with the scale rationale for each — the '.explain and iterate'
+audit trail (SURVEY §4, SCALE.md).  The second writes
+``plans/r<N>/<query>_<before|after>.txt``, each query's
+``.explain("formatted")`` output: the before/after evidence a round that
+changes plans (or claims it changes none) commits.  Queries that drain a
+stream through a memory sink have no single batch plan; for those the
+BATCH-side plan of the returned frame is dumped.
 """
 
 from __future__ import annotations
 
+import argparse
+import io
 import os
 import sys
+from contextlib import redirect_stdout
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SHOWCASE = [
     (
@@ -320,7 +332,40 @@ def _watermark_col(splan: str) -> str:
     return "ts (LTZ)" if "ts#" in tail else "ts_wall"
 
 
+def dump_round(spark, sf_dir: str, rnd: int, tag: str, names: list[str]) -> None:
+    """Write each query's formatted plan to plans/r<rnd>/<query>_<tag>.txt."""
+    from scalable_data_integration_with_llms_spark.caching import (
+        clear_all_memos,
+        release_scoped,
+    )
+    from scalable_data_integration_with_llms_spark.queries import QUERIES
+
+    out_dir = os.path.join(ROOT, "plans", f"r{rnd}")
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        df = QUERIES[name](spark, sf_dir)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain("formatted")
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as fh:
+            fh.write(f"== {name} ({tag}, sf_dir={sf_dir}) ==\n")
+            fh.write(buf.getvalue())
+        release_scoped()
+        print(f"wrote {path}")
+    clear_all_memos()
+    spark.stop()
+
+
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--round", type=int, help="write plans/r<N>/ dumps")
+    ap.add_argument("tag", nargs="?", choices=("before", "after"))
+    ap.add_argument("queries", nargs="*")
+    args = ap.parse_args()
+    if args.round is not None and not (args.tag and args.queries):
+        ap.error("--round needs before|after and at least one query")
+
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
     from scalable_data_integration_with_llms_spark.queries import QUERIES
     from scalable_data_integration_with_llms_spark.session import get_spark
@@ -328,6 +373,9 @@ def main() -> None:
     spark = get_spark("plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
     sf_dir = "/root/testdata/sf0.01"
+    if args.round is not None:
+        dump_round(spark, sf_dir, args.round, args.tag, args.queries)
+        return
 
     print("# PLANS — physical-plan audit for representative queries")
     print()

@@ -189,14 +189,18 @@ def matching_f1(spark: SparkSession, cat: DataFrame) -> DataFrame:
 
 
 def _ranked_prefs(cat: DataFrame) -> DataFrame:
-    from scalable_data_integration_with_llms_spark.llm.boundary import mock_score_candidates
+    from scalable_data_integration_with_llms_spark.llm.boundary import (
+        SCORED_SCHEMA,
+        llm_map,
+        mock_score_request,
+    )
     from scalable_data_integration_with_llms_spark.operators.candidates import (
         generate_candidates,
         rank_preferences,
     )
 
     cands = generate_candidates(cat.select("case_id", "side", "col_name", "col_type"))
-    return rank_preferences(mock_score_candidates(cands))
+    return rank_preferences(llm_map(cands, mock_score_request, SCORED_SCHEMA))
 
 
 def _replicated_gold(spark: SparkSession, cat: DataFrame) -> DataFrame:
