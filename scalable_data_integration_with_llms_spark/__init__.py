@@ -1,7 +1,7 @@
 """sdi-spark: a PySpark-native engine with the query and data-processing
 capabilities of OSU-IDEA-Lab/scalable-data-integration-with-LLMs.
 
-The reference is a single-node pandas/SQLite/sqlglot pipeline for LLM-assisted
+The reference is a single-node pandas/SQLite pipeline for LLM-assisted
 schema matching and schema mapping.  This package re-expresses its semantics as
 declarative Spark DataFrame plans (Catalyst/Tungsten pick the physical
 strategy), with the LLM inference isolated behind one arrow-batched

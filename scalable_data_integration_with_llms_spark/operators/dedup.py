@@ -48,28 +48,17 @@ def exact_dedup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def word_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, spread: bool | None = None
-) -> DataFrame:
+def word_shingles(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> DataFrame:
     """Distinct word n-gram shingles per document: (id, shingle).
 
     Built from ``split`` + zipped shifted slices (``ngram_strings``) —
     JVM-side, no UDF: shingle i joins words[i .. i+n-1] for i in 0 .. len-n.
-
-    ``spread`` controls a pre-explode ``repartition`` that spreads doc rows
-    across cores when the source arrives in fewer partitions than the
-    cluster has slots (a single local parquet file = one partition).  The
-    default (None) auto-detects: repartition only when the scan is at less
-    than half the default parallelism — at cluster scale the input already
-    has enough partitions and this no-ops, while at bench scale the check
-    avoids paying a doc-row shuffle the downstream shuffles would absorb
-    anyway.
+    Doc rows are spread across cores before the explode
+    (``sources.readers.spread``: a no-op unless the input is narrow).
     """
-    if spread is None:
-        par = df.sparkSession.sparkContext.defaultParallelism
-        spread = df.rdd.getNumPartitions() < max(2, par // 2)
-    if spread:
-        df = df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    from ..sources.readers import spread
+
+    df = spread(df)
     words = F.split(F.col(text_col), " ")
     shingles = ngram_strings(words, n)
     # distinct-per-doc happens map-side (array_distinct before the explode):
@@ -545,14 +534,14 @@ def duplicate_spans(
     """
     from pyspark.sql import Window as W
 
-    # spread doc rows pre-explode (word_shingles' auto-detect): a
+    # spread doc rows pre-explode (sources.readers.spread): a
     # single-file scan is ONE input partition, so the window-hash stream
     # (explode + per-position md5 over the slice) otherwise runs on one
     # core — and it runs once per plan branch (the df-filter build side and
     # the semi-join probe both read it)
-    from ..sources.readers import spread_scan
+    from ..sources.readers import spread
 
-    df = spread_scan(df)
+    df = spread(df)
     words = F.split(F.col(text_col), " ", -1)
     base = df.select(F.col(id_col).alias("doc"), words.alias("w")).filter(
         F.size("w") >= w

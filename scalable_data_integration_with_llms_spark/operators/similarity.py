@@ -22,26 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..caching import scoped_persist
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin the STREAM side of a broadcast join out to the session's
-    default parallelism when the scan gives fewer partitions.
-
-    The stream side inherits the scan's partitioning, and a corpus that
-    arrives as one small parquet file runs the whole O(N²·dim) fold in ONE
-    task — found live in the r10 sf1 sweep: ``q_ann_plane_sweep``'s exact
-    side sat 20+ minutes in a single-task stage over a 20k-vector
-    single-file corpus while 31 cores idled.  The repartition shuffles N
-    rows — noise against the N²·dim fold it parallelizes — and is skipped
-    when the scan is already wide (a real 100 TB corpus arrives in
-    thousands of files; this guard is for small/medium corpora and
-    single-file test layouts)."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+from ..sources.readers import spread
 
 
 def _as_double(vec: Column) -> Column:
@@ -99,7 +80,7 @@ def cosine_topk(
     )
     scored = (
         F.broadcast(q)
-        .crossJoin(_spread(c))
+        .crossJoin(spread(c))
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",
@@ -142,7 +123,7 @@ def ivf_topk(
     )
     scored = (
         F.broadcast(q)
-        .join(_spread(c), "part")
+        .join(spread(c), "part")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select(
             "query_id",

@@ -18,7 +18,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.overlap import OverlapCounts, table_overlap
-from ..plans.sql_rewrite import Statement, prepare_response, rewrite_map_pk
+from ..plans.sql_ast import qualify_sql
+from ..plans.sql_rewrite import (
+    Statement,
+    insert_select,
+    prepare_response,
+    referenced_tables,
+    rewrite_map_pk,
+)
 from ..plans.timeout import DEFAULT_TIMEOUT_S, OK, run_with_timeout
 
 
@@ -47,13 +54,9 @@ class MappingScenario:
 
 def join_referenced_tables(join_sql: str, tables: dict[str, str] | list[str]) -> list[str]:
     """Target tables the join-overlap SQL actually references, in dict
-    order — decided by ``sql_rewrite.referenced_tables``, the same
-    literal-aware word-boundary matcher ``_sub_namespace`` substitutes
-    with, so the persist selection and the namespace rewrite can never
-    diverge (ADVICE r8; previously an independent ``\\b``-regex that also
-    scanned string literals)."""
-    from ..plans.sql_rewrite import referenced_tables
-
+    order — decided by ``sql_rewrite.referenced_tables``, which reads the
+    same analysis ``qualify_sql`` (``_sub_namespace``) rewrites from, so the
+    persist selection and the namespace rewrite can never diverge."""
     return referenced_tables(join_sql, list(tables))
 
 
@@ -117,26 +120,26 @@ class MappingEngine:
         for s in stmts:
             if not s.admitted:
                 continue
-            # U3: map_pk(tbl, attr, val) -> scalar subquery against a
-            # rank-by-value dimension registered on demand
-            s.sql, pk_refs = rewrite_map_pk(s.sql)
-            for tbl, attr in pk_refs:
-                self._register_map_pk_dim(tbl, attr)
-            if s.kind == "INSERT" and s.target_table:
-                bare = s.target_table.split(".")[-1].removeprefix(f"{vp}{ns}_")
-                select_sql = _strip_insert_prefix(s.sql)
-                res = run_with_timeout(
-                    self.spark,
-                    lambda sel=select_sql, b=bare: self._apply_insert(ns, b, sel),
-                    timeout_s,
-                )
-            else:
-                res = run_with_timeout(
-                    self.spark, lambda q=s.sql: self.spark.sql(q).collect(), timeout_s
-                )
+            res = run_with_timeout(self.spark, lambda: self._execute(s, ns), timeout_s)
             if res.status != OK:
                 s.ignore_reason = f"{res.status}: {res.error or ''}".strip()[:200]
         return stmts
+
+    def _execute(self, s: Statement, ns: str) -> None:
+        """Run one admitted statement into ``ns``.  Everything that can fail
+        on predicted SQL (an unknown map_pk table, an INSERT shape the
+        executor cannot take) raises here, inside the timed region, so it
+        marks this statement instead of aborting the evaluation."""
+        # U3: map_pk(tbl, attr, val) -> scalar subquery against a
+        # rank-by-value dimension registered on demand
+        s.sql, pk_refs = rewrite_map_pk(s.sql)
+        for tbl, attr in pk_refs:
+            self._register_map_pk_dim(tbl, attr)
+        if s.kind == "INSERT" and s.target_table:
+            bare = s.target_table.split(".")[-1].removeprefix(f"{self.sc.view_ns}{ns}_")
+            self._apply_insert(ns, bare, insert_select(s.sql))
+        else:
+            self.spark.sql(s.sql).collect()
 
     def _register_map_pk_dim(self, tbl: str, attr: str) -> None:
         """Register ``__mappk_{tbl}_{attr}`` = (pk_val, pk_id): dense
@@ -250,17 +253,5 @@ class MappingEngine:
         return MappingResult(counts=counts, statement_log=log)
 
 
-def _strip_insert_prefix(sql: str) -> str:
-    """``INSERT INTO t [(cols)] SELECT ...`` -> the SELECT part."""
-    import re
-
-    m = re.search(r"INSERT\s+INTO\s+[\w.]+\s*(?:\([^)]*\))?\s*(SELECT|WITH|VALUES)", sql, re.IGNORECASE)
-    if not m:
-        raise ValueError(f"unsupported INSERT shape: {sql[:80]}")
-    return sql[m.start(1):]
-
-
 def _sub_namespace(sql: str, target_tables: dict[str, str], ns: str) -> str:
-    from ..plans.sql_rewrite import _replace_table_refs
-
-    return _replace_table_refs(sql, {t: f"{ns}_{t}" for t in target_tables})
+    return qualify_sql(sql, {t: f"{ns}_{t}" for t in target_tables})

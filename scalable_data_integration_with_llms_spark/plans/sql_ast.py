@@ -1,13 +1,13 @@
-"""Scope-aware SQL qualification backend (U7) — no third-party parser.
+"""The engine's one SQL lexer plus scope-aware qualification (U7).
 
-The reference qualifies LLM-emitted SQL on a sqlglot parse tree
+The reference qualifies LLM-emitted SQL on a parse tree
 (``Schema Mapping/AnalysisUtils/Evaluator.py:89-105``: set the ``db`` arg on
 every unqualified Table node) and re-renders per dialect (``:257,271``).
-This container has no sqlglot, so this module implements the same decision
-procedure over its own parse: a SQL tokenizer plus a single-pass structural
-analysis that classifies every identifier's ROLE — table reference, alias
-definition, CTE name, column qualifier, function name, plain column — and
-rewrites only the roles the reference's mechanism rewrites:
+This module implements the same decision procedure with no third-party
+parser: a SQL tokenizer plus a single-pass structural analysis that
+classifies every identifier's ROLE — table reference, alias definition, CTE
+name, column qualifier, function name, plain column — and rewrites only the
+roles the reference's mechanism rewrites:
 
 * unqualified table references whose name is in the mapping;
 * column qualifiers (``t.col``) that follow a renamed table, because this
@@ -15,16 +15,18 @@ rewrites only the roles the reference's mechanism rewrites:
   namespace, so dangling qualifiers must follow the rename.
 
 Names defined INSIDE the statement — FROM/JOIN aliases, subquery aliases,
-CTE names — shadow the mapping and are never rewritten.  (sqlglot's plain
-``find_all(exp.Table)`` does not scope-resolve, so the reference would
+CTE names — shadow the mapping and are never rewritten.  (A plain
+tree-wide table search does not scope-resolve, so the reference would
 rewrite a CTE reference that collides with a source-table name; this
-backend treats statement-local names as shadowing, the conservative
-reading.  The parity test pins agreement on the admissible shapes, which
-contain no such collisions.)
+module treats statement-local names as shadowing, the conservative
+reading.)
 
-Tokens carry their leading whitespace, so rendering is lossless
-concatenation — the analog of sqlglot's ``.sql()`` re-render, minus any
-reformatting.
+``tokenize`` is the only lexer that reads SQL in ``plans/``: statement
+splitting, classification, INSERT-body extraction and the ``map_pk``
+rewrite in ``sql_rewrite`` all walk its tokens.  Comments and whitespace
+are never tokens — they ride in the next token's ``ws`` (or the one
+empty-text trailing token) — so rendering is lossless concatenation, the
+analog of the reference's re-render minus any reformatting.
 """
 
 from __future__ import annotations
@@ -34,7 +36,7 @@ from dataclasses import dataclass, field
 
 _TOKEN_RE = re.compile(
     r"""
-    (?P<ws>(?:\s|--[^\n]*|/\*.*?\*/)*)
+    (?P<ws>(?:\s|--[^\n]*|/\*.*?\*/)*+)   # possessive: a comment is never re-lexed
     (?P<tok>
         '(?:[^']|'')*'            # string literal
       | "(?:[^"]|"")*"            # quoted identifier
@@ -95,7 +97,7 @@ def tokenize(sql: str) -> list[Tok]:
     pos = 0
     while pos < len(sql):
         m = _TOKEN_RE.match(sql, pos)
-        if not m or m.end() == pos:
+        if not m:
             # trailing whitespace/comment only
             out.append(Tok("op", "", sql[pos:]))
             break

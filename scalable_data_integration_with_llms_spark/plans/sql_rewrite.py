@@ -1,11 +1,11 @@
 """SQL admission control + namespace rewriting for the Schema-Mapping
 execution engine (SURVEY §2.9 U7, §2.2 P6, §4 "custom pre-pass").
 
-The reference parses LLM-emitted SQL with sqlglot, drops inadmissible
-statements, qualifies bare table names into SQLite ATTACH namespaces, and
-executes on SQLite (``Schema Mapping/AnalysisUtils/Evaluator.py:59-119``).
-The engine reproduces the same decision rules but executes on Spark SQL
-against temp views named ``{namespace}_{table}``:
+The reference parses LLM-emitted SQL once, drops inadmissible statements,
+qualifies bare table names into SQLite ATTACH namespaces, and executes on
+SQLite (``Schema Mapping/AnalysisUtils/Evaluator.py:59-119``).  The engine
+reproduces the same decision rules but executes on Spark SQL against temp
+views named ``{namespace}_{table}``:
 
 * admission (``_mark_queries_to_ignore``, Evaluator.py:59-87): keep only
   DDL/DML; drop CREATE SCHEMA, and CREATE/DROP of *target* tables (the
@@ -18,22 +18,11 @@ against temp views named ``{namespace}_{table}``:
   ns_t AS (prior UNION ALL) SELECT ...`` handled by the executor
   (mapping_engine.py).
 
-Three qualification backends, preferred in this order:
-
-* **sqlglot AST path** (``_replace_table_refs_ast``): when the public
-  ``sqlglot`` package is importable, table nodes and table-qualified column
-  references are renamed on the parse tree — the reference's own mechanism.
-* **built-in scope-aware path** (``plans/sql_ast.qualify_sql``): this
-  repo's own tokenizer + structural analysis, always available, with
-  statement-local names (aliases, CTEs) shadowing the mapping — the default
-  in this container where sqlglot is absent, so the AST-grade decision
-  procedure actually RUNS in CI rather than lying dormant behind an import
-  guard.
-* **regex path** (``_replace_table_refs``): the conservative word-boundary
-  rewriter, kept as the parity reference for the admissible statement
-  shapes (LLM-emitted INSERT/SELECT/CREATE/DROP over simple identifiers).
-  tests/test_mapping_streaming.py asserts built-in == regex on those
-  shapes, and == sqlglot whenever that package is present.
+Every decision here — where a statement ends, its kind and target table,
+which identifiers are table references, where an INSERT's SELECT body
+starts, where ``map_pk(...)`` is called — reads the token stream of
+``sql_ast.tokenize``, the one SQL lexer.  Comments and string literals are
+never mistaken for SQL, as in the reference's parser.
 """
 
 from __future__ import annotations
@@ -41,12 +30,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 
-try:  # pragma: no cover - environment-dependent upgrade path
-    import sqlglot  # noqa: F401
-
-    HAVE_SQLGLOT = True
-except ImportError:
-    HAVE_SQLGLOT = False
+from .sql_ast import Tok, analyze, qualify_sql, tokenize, transpile_sqlite_to_spark
 
 
 @dataclass
@@ -72,54 +56,99 @@ def extract_sql_blocks(response: str) -> str:
     return "\n".join(blocks) if blocks else response
 
 
+def _render(toks: list[Tok]) -> str:
+    return "".join(t.ws + t.text for t in toks)
+
+
 def split_statements(sql: str) -> list[str]:
-    """Split on ';' outside single/double-quoted strings."""
-    out, buf, quote = [], [], None
-    for ch in sql:
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-            buf.append(ch)
-        elif ch == ";":
-            out.append("".join(buf))
-            buf = []
+    """Split at ``;`` tokens; statements that hold only whitespace and
+    comments are dropped."""
+    out: list[list[Tok]] = [[]]
+    for t in tokenize(sql):
+        if t.kind == "op" and t.text == ";":
+            out.append([])
         else:
-            buf.append(ch)
-    out.append("".join(buf))
-    return [s.strip() for s in out if s.strip()]
+            out[-1].append(t)
+    return [_render(toks).strip() for toks in out if any(t.text for t in toks)]
 
 
-_KIND_RE = re.compile(r"^\s*(INSERT|SELECT|CREATE|DROP|UPDATE|DELETE|WITH)\b", re.IGNORECASE)
-_INSERT_TABLE_RE = re.compile(r"INSERT\s+INTO\s+([A-Za-z_][\w.]*)", re.IGNORECASE)
-_CREATE_TABLE_RE = re.compile(
-    r"CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?(TABLE|VIEW|SCHEMA)\s+(?:IF\s+NOT\s+EXISTS\s+)?([A-Za-z_][\w.]*)",
-    re.IGNORECASE,
-)
-_DROP_TABLE_RE = re.compile(r"DROP\s+(?:TABLE|VIEW)\s+(?:IF\s+EXISTS\s+)?([A-Za-z_][\w.]*)", re.IGNORECASE)
+_KINDS = frozenset({"insert", "select", "create", "drop", "update", "delete", "with"})
+
+
+def _words(sql: str) -> list[Tok]:
+    """The statement's tokens minus the empty trailing one (comments and
+    whitespace live in ``ws``)."""
+    return [t for t in tokenize(sql) if t.text]
+
+
+def _word(toks: list[Tok], i: int) -> str:
+    return toks[i].lower if i < len(toks) and toks[i].kind == "ident" else ""
+
+
+def _name_at(toks: list[Tok], i: int) -> tuple[str | None, int]:
+    """A bare, optionally dotted (``ns.t``) name starting at ``toks[i]``:
+    (lower-cased name or None, index after it)."""
+
+    def bare(j: int) -> bool:
+        return j < len(toks) and toks[j].kind == "ident" and toks[j].text[0] not in "\"`["
+
+    if not bare(i):
+        return None, i
+    parts = [toks[i].text]
+    i += 1
+    while i + 1 < len(toks) and toks[i].text == "." and bare(i + 1):
+        parts.append(toks[i + 1].text)
+        i += 2
+    return ".".join(parts).lower(), i
+
+
+def _insert_target(toks: list[Tok]) -> tuple[str | None, int]:
+    """``INSERT INTO name``: (target, index after it)."""
+    if _word(toks, 0) == "insert" and _word(toks, 1) == "into":
+        return _name_at(toks, 2)
+    return None, 0
 
 
 def classify(stmt: str) -> Statement:
-    m = _KIND_RE.match(stmt)
-    kind = m.group(1).upper() if m else "OTHER"
-    if kind == "WITH":
-        kind = "SELECT"
+    toks = _words(stmt)
+    head = _word(toks, 0)
+    kind = ("SELECT" if head == "with" else head.upper()) if head in _KINDS else "OTHER"
     s = Statement(sql=stmt, kind=kind)
     if kind == "INSERT":
-        t = _INSERT_TABLE_RE.search(stmt)
-        s.target_table = t.group(1).lower() if t else None
+        s.target_table = _insert_target(toks)[0]
     elif kind == "CREATE":
-        t = _CREATE_TABLE_RE.search(stmt)
-        if t:
-            if t.group(1).upper() == "SCHEMA":
+        i = 3 if (_word(toks, 1), _word(toks, 2)) == ("or", "replace") else 1
+        if _word(toks, i) in ("temp", "temporary"):
+            i += 1
+        obj = _word(toks, i)
+        if obj in ("table", "view", "schema"):
+            i += 1
+            if [_word(toks, i + k) for k in range(3)] == ["if", "not", "exists"]:
+                i += 3
+            if obj == "schema":
                 s.ignore_reason = "Trying to CREATE SCHEMA. Statement ignored"
-            s.target_table = t.group(2).lower()
-    elif kind == "DROP":
-        t = _DROP_TABLE_RE.search(stmt)
-        s.target_table = t.group(1).lower() if t else None
+            s.target_table = _name_at(toks, i)[0]
+    elif kind == "DROP" and _word(toks, 1) in ("table", "view"):
+        i = 4 if (_word(toks, 2), _word(toks, 3)) == ("if", "exists") else 2
+        s.target_table = _name_at(toks, i)[0]
     return s
+
+
+def insert_select(sql: str) -> str:
+    """``INSERT INTO t [(cols)] SELECT ...`` -> the SELECT (or WITH /
+    VALUES) body, byte for byte."""
+    toks = tokenize(sql)
+    target, i = _insert_target(toks)
+    if target is not None and i < len(toks) and toks[i].text == "(":
+        depth = 0
+        for i in range(i, len(toks)):
+            depth += {"(": 1, ")": -1}.get(toks[i].text, 0)
+            if depth == 0:
+                break
+        i += 1
+    if target is None or _word(toks, i) not in ("select", "with", "values"):
+        raise ValueError(f"unsupported INSERT shape: {sql[:80]}")
+    return toks[i].text + _render(toks[i + 1 :])
 
 
 def admit(statements: list[Statement], target_tables: set[str]) -> list[Statement]:
@@ -134,76 +163,15 @@ def admit(statements: list[Statement], target_tables: set[str]) -> list[Statemen
     return statements
 
 
-# The ONE protected-segment splitter shared by ``_replace_table_refs`` and
-# ``referenced_tables`` (they must stay in lockstep — ADVICE r8): odd split
-# parts are passed through untouched and never matched against.  Protected:
-# single-quoted literals (with '' escapes), double-quoted identifiers,
-# ``--`` line comments, and ``/* */`` block comments — so a table name that
-# appears only inside a comment or quoted identifier neither triggers a
-# persist nor gets rewritten (ADVICE r9).
-_LITERAL_SPLIT = re.compile(
-    r"('(?:[^']|'')*'|\"(?:[^\"]|\"\")*\"|--[^\n]*|/\*.*?\*/)", re.DOTALL
-)
-
-
-def _table_ref_pattern(names) -> re.Pattern:
-    """The ONE matcher for bare table references: word-boundary, longest
-    name first, case-insensitive; ``(?<![\\w.])`` protects already-qualified
-    ``ns.t``, ``(?![\\w(]`` keeps function calls and longer identifiers out
-    while letting ``t.col`` qualifiers follow a rename."""
-    return re.compile(
-        r"(?<![\w.])(" + "|".join(re.escape(t) for t in sorted(names, key=len, reverse=True)) + r")(?![\w(])",
-        re.IGNORECASE,
-    )
-
-
-def _replace_table_refs(sql: str, mapping: dict[str, str]) -> str:
-    """Word-boundary replacement of bare table names outside string
-    literals.  Names already namespace-qualified (``ns.t``) are protected by
-    the lookbehind; a trailing ``.`` is allowed so table-qualified column
-    references (``t.col``) follow the table rename and don't dangle."""
-    pattern = _table_ref_pattern(mapping)
-    out = []
-    for i, part in enumerate(_LITERAL_SPLIT.split(sql)):
-        if i % 2 == 1:
-            out.append(part)
-        else:
-            out.append(pattern.sub(lambda m: mapping[m.group(1).lower()], part))
-    return "".join(out)
-
-
 def referenced_tables(sql: str, names) -> list[str]:
-    """Which of ``names`` the SQL actually references, decided by the EXACT
-    matcher ``_replace_table_refs`` substitutes with (same literal split,
-    same word-boundary pattern), so a caller choosing what to persist can
-    never disagree with what the namespace rewrite will touch (ADVICE r8 on
-    the old independent regex in ``mapping_engine.join_referenced_tables``).
-    Returns names in their input order."""
-    if not names:
-        return []
-    pattern = _table_ref_pattern(names)
-    found = set()
-    for i, part in enumerate(_LITERAL_SPLIT.split(sql)):
-        if i % 2 == 0:
-            found.update(m.group(1).lower() for m in pattern.finditer(part))
+    """Which of ``names`` the SQL references — exactly the names
+    ``qualify_sql`` rewrites: table-ref and column-qualifier positions of
+    ``sql_ast.analyze``, minus statement-local names (aliases, CTEs), so a
+    caller choosing what to persist can never disagree with the namespace
+    rewrite.  Returns names in their input order."""
+    a = analyze(sql)
+    found = {a.tokens[i].lower for i in (*a.table_refs, *a.qualifiers)} - a.local_names
     return [t for t in names if t.lower() in found]
-
-
-def _replace_table_refs_ast(sql: str, mapping: dict[str, str]) -> str:
-    """sqlglot-backed qualification (the reference's own mechanism,
-    Evaluator.py:89-105): rename unqualified table nodes and the column
-    qualifiers that reference them on the parse tree, then re-render."""
-    import sqlglot
-    from sqlglot import exp
-
-    tree = sqlglot.parse_one(sql)
-    for node in tree.find_all(exp.Table):
-        if not node.db and node.name and node.name.lower() in mapping:
-            node.set("this", exp.to_identifier(mapping[node.name.lower()]))
-    for node in tree.find_all(exp.Column):
-        if node.table and node.table.lower() in mapping:
-            node.set("table", exp.to_identifier(mapping[node.table.lower()]))
-    return tree.sql()
 
 
 def qualify_namespaces(
@@ -223,14 +191,8 @@ def qualify_namespaces(
         mapping[t] = f"{target_ns}_{t}"
     if not mapping:
         return stmt
-    if HAVE_SQLGLOT:
-        new_sql = _replace_table_refs_ast(stmt.sql, mapping)
-    else:
-        from .sql_ast import qualify_sql
-
-        new_sql = qualify_sql(stmt.sql, mapping)
     return Statement(
-        sql=new_sql,
+        sql=qualify_sql(stmt.sql, mapping),
         kind=stmt.kind,
         ignore_reason=stmt.ignore_reason,
         target_table=stmt.target_table,
@@ -240,27 +202,23 @@ def qualify_namespaces(
 def prepare_response(
     response: str, source_tables: set[str], target_tables: set[str],
     source_ns: str = "source", target_ns: str = "pred",
-    dialect_normalize: bool = True,
 ) -> list[Statement]:
     """Full pre-pass: fence-extract → split → classify → admit → qualify →
     dialect render (the reference renders per dialect at execution time,
     ``Evaluator.py:257,271``; here SQLite-isms normalize to Spark SQL —
     semantics-preserving transforms only, see sql_ast.transpile_sqlite_to_spark)."""
-    from .sql_ast import transpile_sqlite_to_spark
-
     stmts = [classify(s) for s in split_statements(extract_sql_blocks(response))]
     admit(stmts, target_tables)
     out = []
     for s in stmts:
         if s.admitted:
             s = qualify_namespaces(s, source_tables, target_tables, source_ns, target_ns)
-            if dialect_normalize:
-                s = Statement(
-                    sql=transpile_sqlite_to_spark(s.sql),
-                    kind=s.kind,
-                    ignore_reason=s.ignore_reason,
-                    target_table=s.target_table,
-                )
+            s = Statement(
+                sql=transpile_sqlite_to_spark(s.sql),
+                kind=s.kind,
+                ignore_reason=s.ignore_reason,
+                target_table=s.target_table,
+            )
         out.append(s)
     return out
 
@@ -272,39 +230,24 @@ def prepare_response(
 # calling map_pk is rewritten into a scalar subquery against a precomputed
 # ``__mappk_{tbl}_{attr}`` dimension view (SURVEY §4 "dialect translation").
 
-_MAP_PK_HEAD = re.compile(r"\bmap_pk\s*\(", re.IGNORECASE)
 
-
-def _split_args(src: str, start: int) -> tuple[list[str], int] | None:
-    """Parse a parenthesized argument list starting at ``src[start] == '('``;
-    returns (args, index_after_close) or None if unbalanced."""
-    depth, quote, args, buf = 0, None, [], []
-    i = start
-    while i < len(src):
-        ch = src[i]
-        if quote:
-            buf.append(ch)
-            if ch == quote:
-                quote = None
-        elif ch in ("'", '"'):
-            quote = ch
-            buf.append(ch)
-        elif ch == "(":
-            depth += 1
-            if depth > 1:
-                buf.append(ch)
-        elif ch == ")":
-            depth -= 1
+def _call_args(toks: list[Tok], i: int) -> tuple[list[list[Tok]], int] | None:
+    """Arguments of the call whose ``(`` is ``toks[i]``, split at depth-1
+    commas: (argument token lists, index after the closing ``)``), or None
+    if the parentheses never balance."""
+    depth, args = 0, [[]]
+    for j in range(i, len(toks)):
+        t = toks[j]
+        if t.text == "(" or t.text == ")":
+            depth += 1 if t.text == "(" else -1
             if depth == 0:
-                args.append("".join(buf).strip())
-                return args, i + 1
-            buf.append(ch)
-        elif ch == "," and depth == 1:
-            args.append("".join(buf).strip())
-            buf = []
-        else:
-            buf.append(ch)
-        i += 1
+                return args, j + 1
+            if depth == 1 and t.text == "(":
+                continue  # the call's own parenthesis
+        elif t.text == "," and depth == 1:
+            args.append([])
+            continue
+        args[-1].append(t)
     return None
 
 
@@ -318,24 +261,24 @@ def rewrite_map_pk(sql: str) -> tuple[str, set[tuple[str, str]]]:
     ``(SELECT pk_id FROM __mappk_tbl_attr WHERE pk_val = (val))``; returns
     the rewritten SQL plus the set of (tbl, attr) dimensions the executor
     must register.  Nested parens/quotes in ``val`` are handled; unbalanced
-    calls are left untouched (the statement will fail loudly at execution)."""
+    or wrong-arity calls are left untouched (the statement will fail loudly
+    at execution).  ``map_pk(`` inside a literal or comment is not a call."""
+    toks = tokenize(sql)
     refs: set[tuple[str, str]] = set()
-    out = sql
-    while True:
-        m = _MAP_PK_HEAD.search(out)
-        if not m:
-            break
-        parsed = _split_args(out, m.end() - 1)
-        if parsed is None:
-            break
-        args, end = parsed
-        if len(args) != 3:
-            break
-        tbl, attr = _ident(args[0]), _ident(args[1])
-        refs.add((tbl, attr))
-        sub = (
-            f"(SELECT pk_id FROM __mappk_{tbl}_{attr} "
-            f"WHERE pk_val = ({args[2]}))"
-        )
-        out = out[: m.start()] + sub + out[end:]
-    return out, refs
+    out = []
+    i = 0
+    while i < len(toks):
+        t = toks[i]
+        call = None
+        if t.kind == "ident" and t.lower == "map_pk" and i + 1 < len(toks) and toks[i + 1].text == "(":
+            call = _call_args(toks, i + 1)
+        if call is None or len(call[0]) != 3:
+            out.append(t.ws + t.text)
+            i += 1
+            continue
+        args, i = call
+        tbl, attr = (_ident(_render(a)) for a in args[:2])
+        val, inner = rewrite_map_pk(_render(args[2]).strip())
+        refs |= inner | {(tbl, attr)}
+        out.append(f"{t.ws}(SELECT pk_id FROM __mappk_{tbl}_{attr} WHERE pk_val = ({val}))")
+    return "".join(out), refs

@@ -39,69 +39,20 @@ from . import llm_q  # noqa: F401, E402
 # from the parent commit (AST compare, docstrings ignored), then every
 # registry query whose build calls one of them (per-query call trace at
 # sf0.01, memos cleared between queries).  This round that is the
-# hashing-layer unification (hash60, the shared MinHash helpers, the one
-# Bloom filter), the count-free transactional sink and the mock scorer
-# running through llm_map: 66 traced queries, in registry order, plus
-# q_stream_near_dup_gate_tws, which calls stream_minhash_bands but
-# registers only where the TWS runtime exists.  The block exceeds the
-# 50-query driver window, so no stale rows ride this round; oldest
-# standing driver verification stays r10.
+# one-lexer mapping pre-pass (statement split, classification, table
+# references and the map_pk rewrite over sql_ast.tokenize), the one
+# scan-spreading decision (sources.readers.spread) and the fixed EHR
+# scorer parallelism: 40 traced queries, in registry order, plus
+# q_stream_near_dup_gate_tws, which calls spread_stream but registers only
+# where the TWS runtime exists.  The 9 stalest driver rows (r10) fill the
+# 50-query window.
 _VERIFY_FIRST = [
     "q_bloom_contamination",  # changed/new
     "q_lsh_verified_pairs",  # changed/new
-    "q_exactly_once_sink",  # changed/new
-    "q_sink_compaction",  # changed/new
     "q_stream_near_dup_gate",  # changed/new
     "q_stream_near_dup_gate_tws",  # changed/new
     "q_minhash_est_jaccard",  # changed/new
-    "q_confidence_eval",  # changed/new
-    "q_confidence_summary",  # changed/new
-    "q_example_selector_coverage",  # changed/new
-    "q_example_selector_random",  # changed/new
-    "q_weighted_sample",  # changed/new
-    "q_cms_supplier_counts",  # changed/new
-    "q_stratified_sample",  # changed/new
-    "q_bloom_join_pushdown",  # changed/new
-    "q_mock_match_scores",  # changed/new
-    "q_bidirectional_scores",  # changed/new
-    "q_topk_alignments",  # changed/new
-    "q_ensemble_union",  # changed/new
-    "q_ensemble_intersection",  # changed/new
-    "q_ensemble_majority",  # changed/new
-    "q_stable_matching",  # changed/new
-    "q_match_round2",  # changed/new
-    "q_ensemble_gold_filter",  # changed/new
-    "q_filtered_preferences",  # changed/new
-    "q_stable_matching_dist",  # changed/new
-    "q_alignment_prf1",  # changed/new
-    "q_mrr",  # changed/new
-    "q_metric_ci",  # changed/new
-    "q_coverage",  # changed/new
-    "q_metrics_by_category",  # changed/new
-    "q_pipeline_e2e",  # changed/new
     "q_minhash_signatures",  # changed/new
-    "q_simhash",  # changed/new
-    "q_simhash_near_dup",  # changed/new
-    "q_semdedup_scaled",  # changed/new
-    "q_stream_kmv_distinct",  # changed/new
-    "q_example_selection",  # changed/new
-    "q_example_selection_scalable",  # changed/new
-    "q_gold_in_options",  # changed/new
-    "q_softmax_scores",  # changed/new
-    "q_prompt_assembly",  # changed/new
-    "q_chat_prompt",  # changed/new
-    "q_ensemble_disjoint",  # changed/new
-    "q_topk_sweep",  # changed/new
-    "q_kmv_distinct",  # changed/new
-    "q_kmv_set_ops",  # changed/new
-    "q_shard_assignment",  # changed/new
-    "q_corpus_pipeline_e2e",  # changed/new
-    "q_domain_affinity",  # changed/new
-    "q_train_val_split",  # changed/new
-    "q_repr_scoring_prompts",  # changed/new
-    "q_mm_prompts",  # changed/new
-    "q_mapping_sample_data_hint",  # changed/new
-    "q_repr_prompt_tokens",  # changed/new
     "q_ehr_round1_matches",  # changed/new
     "q_ehr_matching_f1",  # changed/new
     "q_synthea_round1_matches",  # changed/new
@@ -114,6 +65,38 @@ _VERIFY_FIRST = [
     "q_ehr_ensemble_f1",  # changed/new
     "q_real_benchmarks_summary",  # changed/new
     "q_ehr_effort_report",  # changed/new
+    "q_dedup_ngram_jaccard",  # changed/new
+    "q_dedup_clusters",  # changed/new
+    "q_dedup_containment",  # changed/new
+    "q_dedup_keepers",  # changed/new
+    "q_cross_source_dup_matrix",  # changed/new
+    "q_ppjoin_near_dup",  # changed/new
+    "q_contamination",  # changed/new
+    "q_cosine_topk",  # changed/new
+    "q_ann_ivf",  # changed/new
+    "q_knn_classify",  # changed/new
+    "q_ann_recall",  # changed/new
+    "q_ann_recall_hashed",  # changed/new
+    "q_ivf_recall",  # changed/new
+    "q_ann_filtered",  # changed/new
+    "q_ann_plane_sweep",  # changed/new
+    "q_ivf_nprobe_sweep",  # changed/new
+    "q_stream_topk_types",  # changed/new
+    "q_mapping_overlap",  # changed/new
+    "q_mapping_map_pk",  # changed/new
+    "q_mapping_e2e",  # changed/new
+    "q_mapping_pass_rate",  # changed/new
+    "q_duplicate_spans",  # changed/new
+    "q_strip_duplicate_spans",  # changed/new
+    "q_kmv_distinct",  # r10-latest
+    "q_kmv_set_ops",  # r10-latest
+    "q_llm_boundary_http",  # r10-latest
+    "q_mapping_prompt_render",  # r10-latest
+    "q_mapping_sample_data_hint",  # r10-latest
+    "q_mm_prompts",  # r10-latest
+    "q_ntile_deciles",  # r10-latest
+    "q_packing_efficiency",  # r10-latest
+    "q_quality_threshold_sweep",  # r10-latest
 ]
 
 

@@ -85,51 +85,33 @@ def dataset_gold_df(spark: SparkSession, dataset: str) -> DataFrame:
 
 _PREFS_MEMOS = {"ehr": SessionMemo(), "synthea": SessionMemo()}
 
-# Fixture-scale parallelism defaults.  The scorer is the pipeline's
-# dominant compute (per-pair Python levenshtein through mapInPandas:
-# ~5.7 s for the ~29k EHR candidate rows on ONE task — profiled r14), and
-# the score is per-row deterministic, so spreading it over 8 tasks is
-# result-identical and cuts the cold build ~6×.  Eight, not 32: each task
-# pays Python-worker spin-up, and with a REAL inference backend each
-# partition is a concurrent request stream — 8 keeps fixture-scale load
-# bounded.  A handful of post-shuffle output partitions keeps every
-# downstream task count small.  At corpus scale pass
-# scorer_partitions/output_partitions sized to the case count (or None to
-# leave Spark's partitioning untouched) — the pipeline shape is identical,
-# only the parallelism knob moves.
+# Fixture-scale parallelism.  The scorer is the pipeline's dominant
+# compute (per-pair Python levenshtein through mapInPandas: ~5.7 s for the
+# ~29k EHR candidate rows on ONE task — profiled r14), and the score is
+# per-row deterministic, so spreading it over 8 tasks is result-identical
+# and cuts the cold build ~6×.  Eight, not 32: each task pays
+# Python-worker spin-up, and with a REAL inference backend each partition
+# is a concurrent request stream — 8 keeps fixture-scale load bounded.  A
+# handful of post-shuffle output partitions keeps every downstream task
+# count small.
 _FIXTURE_SCORER_PARTITIONS = 8
 _FIXTURE_OUTPUT_PARTITIONS = 4
 
 
-def _preferences(
-    spark: SparkSession,
-    dataset: str,
-    scorer_partitions: int | None = _FIXTURE_SCORER_PARTITIONS,
-    output_partitions: int | None = _FIXTURE_OUTPUT_PARTITIONS,
-) -> DataFrame:
+def _preferences(spark: SparkSession, dataset: str) -> DataFrame:
     """Scored + ranked preference frame for a benchmark's cases, memoized
     per session: the q_{ehr,synthea}_* queries share it, and the
     mapInPandas scorer must not re-run per consumer (SURVEY §4 recompute
-    trap).  Only the fixture-default parallelism is memoized; a scale run
-    with explicit partition counts builds its own frame."""
+    trap)."""
 
     def build() -> DataFrame:
         catalog = catalog_from_cases(dataset_cases_df(spark, dataset)).select(
             "case_id", "side", "col_name", "col_type"
         )
-        cands = generate_candidates(catalog)
-        if scorer_partitions is not None:
-            cands = cands.coalesce(scorer_partitions)
+        cands = generate_candidates(catalog).coalesce(_FIXTURE_SCORER_PARTITIONS)
         ranked = rank_preferences(llm_map(cands, mock_score_request, SCORED_SCHEMA))
-        if output_partitions is not None:
-            ranked = ranked.coalesce(output_partitions)
-        return ranked
+        return ranked.coalesce(_FIXTURE_OUTPUT_PARTITIONS)
 
-    if (scorer_partitions, output_partitions) != (
-        _FIXTURE_SCORER_PARTITIONS,
-        _FIXTURE_OUTPUT_PARTITIONS,
-    ):
-        return build()
     return _PREFS_MEMOS[dataset].get_or_build(spark, build)
 
 

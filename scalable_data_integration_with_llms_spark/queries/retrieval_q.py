@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 from ..caching import scoped_persist
 from ..functions.determinism import hash60
 from ..functions.text import ngram_structs
-from ..sources.readers import load_table, spread_scan
+from ..sources.readers import load_table, spread
 from .registry import query
 from ..functions.localframe import local_df
 
@@ -524,7 +524,7 @@ def q_strip_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token stream on (doc, tokpos) — both sides uniform.  Text
     re-assembly is array_sort(collect_list(struct(pos, tok))) per doc —
     bounded by document length, never a global sort."""
-    d = spread_scan(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"))
     words = F.split("text", " ", -1)
     base = d.select(F.col("doc_id").alias("doc"), words.alias("w"))
     wins = (

@@ -19,7 +19,7 @@ from ..functions.text import (
 )
 from ..caching import scoped_persist
 from ..operators.metrics import mean_ci95
-from ..sources.readers import load_table, spread_scan
+from ..sources.readers import load_table, spread
 from .registry import query
 from ..functions.localframe import local_df
 
@@ -450,7 +450,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle set is small and broadcasts into a semi-join-shaped equi-join;
     the per-doc distinct count is a second, already-reduced shuffle.  The
     same max_df guard as the Jaccard pipeline applies at corpus scale."""
-    d = spread_scan(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"))
     words = F.split("text", " ")
     shingles4 = ngram_strings(words, 4)
     shingled = (
@@ -537,7 +537,7 @@ def q_bloom_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     locally AND carries fewer exchanges."""
     from ..operators.bloom import BloomSpec, bitmap, contains
 
-    d = spread_scan(load_table(spark, sf_dir, "documents"))
+    d = spread(load_table(spark, sf_dir, "documents"))
     words = F.split("text", " ")
     shingles4 = ngram_strings(words, 4)
     # persist EAGERLY: five plan branches reference the shingled frame
@@ -698,7 +698,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
     d = load_table(spark, sf_dir, "documents")
-    # NOT spread_scan'd: A/B'd the pre-explode spread here and it was
+    # NOT spread: A/B'd the pre-explode spread here and it was
     # neutral — the plain token explode is cheap enough that the doc-row
     # shuffle costs what the parallelism saves (unlike the md5-heavy
     # window/shingle streams, where the spread wins)

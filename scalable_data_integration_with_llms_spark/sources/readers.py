@@ -64,20 +64,25 @@ def _flaky_retry_wrap(df: DataFrame) -> DataFrame:
     return df.mapInPandas(gen, schema=df.schema)
 
 
-def spread_scan(df: DataFrame) -> DataFrame:
-    """Repartition a narrow scan across the cluster's task slots when it
-    arrives in fewer partitions than HALF the default parallelism — the
-    single-file-scan fix (one local parquet file = ONE input partition, so
-    any explode/md5-heavy map side otherwise runs on one core; profiled on
-    q_duplicate_spans, q_tfidf_top_terms, q_bloom_contamination at sf0.1).
+def spread(df: DataFrame) -> DataFrame:
+    """Repartition a narrow input across the cluster's task slots
+    (``sparkContext.defaultParallelism``) before map-heavy work — the one
+    place the engine decides scan spreading.
 
-    The guard keeps this a no-op at cluster scale, where a real input
-    already has enough splits — the shuffle is only paid when the scan is
-    provably under-parallel, and it moves each doc row once, which the
-    map-side work it unlocks more than repays.  Same auto-detect contract
-    as ``operators.dedup.word_shingles(spread=None)``."""
+    A single local parquet file is ONE input partition, so an explode /
+    md5-heavy map side or an O(N²·dim) broadcast-join fold over it otherwise
+    runs on one core (profiled on q_duplicate_spans, q_tfidf_top_terms,
+    q_bloom_contamination at sf0.1; ``q_ann_plane_sweep`` sat 20+ minutes in
+    one task over a single-file sf1 corpus).  The repartition moves each row
+    once, which the map-side work it unlocks more than repays.  A batch
+    frame is spread only when it arrives in fewer partitions than HALF the
+    default parallelism, so this no-ops at cluster scale, where a real input
+    already has enough splits.  A streaming frame has no partition probe
+    and the file stream source yields one partition per file, so a stream
+    is always spread; on a many-file feed the same shuffle balances skewed
+    file sizes."""
     par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < max(2, par // 2):
+    if df.isStreaming or df.rdd.getNumPartitions() < max(2, par // 2):
         return df.repartition(par)
     return df
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.determinism import cents
+from ..sources.readers import spread
 
 # events parquet has shipped with ts as TIMESTAMP(NANOS) (read as long via
 # nanosAsLong, then converted) and as TIMESTAMP(MICROS); probe the footer
@@ -127,20 +128,7 @@ def hourly_rollup(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def spread_stream(df: DataFrame) -> DataFrame:
-    """Spread a file-stream feed across the cluster's task slots before
-    map-heavy work.  The file stream source yields ONE input partition per
-    file, so a single-file feed runs its whole map side (e.g. the
-    12-permutation md5 banding) on one core; the repartition moves each
-    arriving micro-batch's rows once, which the map work it unlocks more
-    than repays, and on a production many-file feed the same shuffle is
-    what balances skewed file sizes.  Sized to
-    ``sparkContext.defaultParallelism`` (the ``spread_scan`` contract)
-    rather than a literal core count: a hard-coded 32 would over-split tiny
-    micro-batches on a low-core host and cap the map side at 32 tasks on a
-    large cluster (streaming frames expose no partition probe, so unlike
-    ``spread_scan`` the shuffle is unconditional)."""
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+spread_stream = spread  # the stream form of sources.readers.spread
 
 
 def run_to_memory(

@@ -34,13 +34,7 @@ def match_batch(catalog_batch: DataFrame, top_k: int = 3) -> DataFrame:
     would serialize the whole batch through one task at scale)."""
     cands = generate_candidates(catalog_batch).repartition("case_id")
     scored = llm_map(cands, mock_score_request, SCORED_SCHEMA)
-    prefs = rank_preferences(scored).persist()
-    try:
-        return stable_match(prefs, top_k=top_k)
-    finally:
-        # materialized by stable_match's action inside foreachBatch writers;
-        # unpersist is deferred to batch completion by the caller
-        pass
+    return stable_match(rank_preferences(scored), top_k=top_k)
 
 
 def run_incremental_matching(

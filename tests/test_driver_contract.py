@@ -55,7 +55,7 @@ def test_skew_guard_bounds_shingle_join(spark, tmp_path):
     rows = [(i, f"unique document body number {i} with distinct words {i * 7}") for i in range(50)]
     rows += [(1000 + i, viral) for i in range(300)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = word_shingles(df, "doc_id", "text", n=3, spread=False)
+    sh = word_shingles(df, "doc_id", "text", n=3)
     guarded = jaccard_pairs(sh, threshold=0.5, max_df=64).count()
     unguarded = jaccard_pairs(sh, threshold=0.5).count()
     assert unguarded >= 300 * 299 / 2  # the clone clique alone

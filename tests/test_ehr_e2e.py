@@ -169,19 +169,6 @@ def test_ehr_bidirectional_f1_is_topk_sweep_k1(spark):
     assert an1 == sweep
 
 
-def test_preferences_parallelism_is_a_parameter(spark):
-    """Non-default partition counts produce the identical frame (only the
-    plan's parallelism moves) and bypass the session memo."""
-    from scalable_data_integration_with_llms_spark.queries.ehr_q import _preferences
-
-    base = _preferences(spark, "synthea")
-    alt = _preferences(spark, "synthea", scorer_partitions=4, output_partitions=8)
-    cols = ["case_id", "side", "query_attr", "candidate_attr", "score_milli", "rank"]
-    assert {tuple(r) for r in base.select(*cols).collect()} == {
-        tuple(r) for r in alt.select(*cols).collect()
-    }
-
-
 def test_ehr_effort_report(spark, duck):
     """The full compute_prf1e row on real data: oracle parity plus the
     reference identities — tp+fn partitions gold, tp+tn <= N, accuracy2

@@ -32,3 +32,23 @@ def test_incremental_matching_matches_batch(spark, tmp_path):
     }
     assert stream_rows == batch_rows
     assert streamed.select("batch_id").distinct().count() >= 1
+
+
+def test_incremental_matching_leaves_no_cached_frames(spark, tmp_path):
+    """Draining the stream leaves Spark's persistent-RDD set as it found
+    it: no micro-batch caches a frame that nothing unpersists."""
+    from scalable_data_integration_with_llms_spark.catalog.cases import case_catalog_df
+    from scalable_data_integration_with_llms_spark.streaming.incremental import run_incremental_matching
+
+    catalog = case_catalog_df(spark)
+    src_dir = str(tmp_path / "cases_in")
+    catalog.write.parquet(src_dir)
+    stream = spark.readStream.schema(catalog.schema).parquet(src_dir)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    q = run_incremental_matching(
+        spark, stream, str(tmp_path / "matches_out"),
+        checkpoint=str(tmp_path / "ckpt"), top_k=3,
+    )
+    q.awaitTermination()
+    assert persistent().size() == before

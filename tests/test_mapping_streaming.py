@@ -37,9 +37,9 @@ EXPLAIN SELECT 1;
 
 
 def test_sql_rewrite_qualified_columns_follow_rename():
-    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import _replace_table_refs
+    from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
 
-    out = _replace_table_refs(
+    out = qualify_sql(
         "SELECT src_t.a, o.b FROM src_t JOIN other o ON src_t.k = o.k "
         "WHERE src_t.name = 'src_t literal'",
         {"src_t": "source_src_t"},
@@ -50,7 +50,7 @@ def test_sql_rewrite_qualified_columns_follow_rename():
     assert "source_src_t.a" in out and "source_src_t.k" in out
     assert "'src_t literal'" in out and "o.b" in out
     assert (
-        _replace_table_refs("SELECT * FROM ns.src_t", {"src_t": "source_src_t"})
+        qualify_sql("SELECT * FROM ns.src_t", {"src_t": "source_src_t"})
         == "SELECT * FROM ns.src_t"
     )
 
@@ -69,11 +69,11 @@ _PARITY_CASES = [
 
 
 def test_sql_rewrite_builtin_ast_parity():
-    """The built-in scope-aware backend must agree with the regex backend on
-    every admissible statement shape — this parity gate always executes (no
-    third-party parser needed)."""
+    """The scope-aware qualifier must agree with the retired regex rewriter
+    (kept in tests/regex_qualify.py) on every admissible statement shape."""
+    from regex_qualify import _replace_table_refs
+
     from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
-    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import _replace_table_refs
 
     for sql in _PARITY_CASES:
         assert qualify_sql(sql, _PARITY_MAPPING) == _replace_table_refs(
@@ -82,9 +82,9 @@ def test_sql_rewrite_builtin_ast_parity():
 
 
 def test_sql_rewrite_builtin_scope_shadowing():
-    """Where the backends legitimately differ: names DEFINED in the
-    statement (aliases, CTEs) shadow the mapping in the built-in backend —
-    the regex rewriter cannot know that."""
+    """Where the regex reference legitimately differs: names DEFINED in the
+    statement (aliases, CTEs) shadow the mapping in the scope-aware
+    qualifier — the regex rewriter cannot know that."""
     from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
 
     # subquery alias colliding with a mapped table name: alias wins
@@ -135,68 +135,113 @@ def test_sql_rewrite_builtin_structures():
 
 
 def test_sql_rewrite_regex_comment_protection():
-    """ADVICE r9: the regex backend's shared literal split also protects
-    ``--`` / ``/* */`` comments and double-quoted identifiers, so a table
-    name appearing only there neither rewrites nor counts as referenced —
-    and the two functions stay in lockstep on every case."""
-    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import (
-        _replace_table_refs,
-        referenced_tables,
-    )
+    """The engine's qualifier and its persist selection read SQL through
+    one lexer, so ``--`` / ``/* */`` comments and double-quoted identifiers
+    are never table references: a table name appearing only there neither
+    rewrites nor counts as referenced — and the two functions stay in
+    lockstep on every case (the cases the retired regex rewriter pinned)."""
+    from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
+    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import referenced_tables
 
     m = {"src_t": "source_src_t", "tgt_t": "pred_tgt_t"}
     names = list(m)
     # name only in a line comment: untouched, not referenced
     sql = "-- src_t setup\nSELECT 1"
-    assert _replace_table_refs(sql, m) == sql
+    assert qualify_sql(sql, m) == sql
     assert referenced_tables(sql, names) == []
-    # name only in a block comment (multi-line): untouched, not referenced
+    # name only in a trailing block comment (multi-line): untouched, not
+    # referenced
     sql = "SELECT a FROM real_t /* join tgt_t\n later */"
-    assert _replace_table_refs(sql, m) == sql
+    assert qualify_sql(sql, m) == sql
     assert referenced_tables(sql, names) == []
-    # name only in a double-quoted identifier: protected (the regex cannot
-    # rewrite inside quotes without corrupting the identifier; fail-loud at
-    # execution beats silently reading the wrong table)
+    # name only in a double-quoted identifier: protected (rewriting inside
+    # quotes would corrupt the identifier; fail-loud at execution beats
+    # silently reading the wrong table)
     sql = 'SELECT "src_t" FROM real_t'
-    assert _replace_table_refs(sql, m) == sql
+    assert qualify_sql(sql, m) == sql
     assert referenced_tables(sql, names) == []
     # real reference next to a comment mention: only the real one acts
     sql = "SELECT a FROM src_t -- not tgt_t\n"
-    assert _replace_table_refs(sql, m) == "SELECT a FROM source_src_t -- not tgt_t\n"
+    assert qualify_sql(sql, m) == "SELECT a FROM source_src_t -- not tgt_t\n"
     assert referenced_tables(sql, names) == ["src_t"]
     # '--' inside a string literal is NOT a comment opener
     sql = "SELECT '--x' FROM src_t"
-    assert _replace_table_refs(sql, m) == "SELECT '--x' FROM source_src_t"
+    assert qualify_sql(sql, m) == "SELECT '--x' FROM source_src_t"
     assert referenced_tables(sql, names) == ["src_t"]
     # lockstep property: whatever referenced_tables reports is exactly what
     # the rewrite touches
     for sql in [
         "-- tgt_t\nINSERT INTO tgt_t SELECT * FROM src_t /* src_t */",
         "SELECT 'src_t', \"tgt_t\" FROM src_t",
+        "SELECT src_t FROM tgt_t",
+        "WITH src_t AS (SELECT 1 AS a) SELECT a FROM src_t",
     ]:
         refs = set(referenced_tables(sql, names))
-        rewritten = _replace_table_refs(sql, m)
+        rewritten = qualify_sql(sql, m)
         for t in names:
             assert (m[t] in rewritten) == (t in refs), (sql, t)
 
 
-def test_sql_rewrite_ast_parity():
-    """When the public sqlglot package is present, it must agree with BOTH
-    in-repo backends on the admissible statement shapes."""
+def test_tokenize_trailing_comment_is_whitespace():
+    """A trailing comment is lexed as whitespace, never re-read as tokens:
+    everything after the last real token lands in the one empty-text
+    trailing token, and rendering stays lossless."""
+    from scalable_data_integration_with_llms_spark.plans.sql_ast import tokenize
+
+    toks = tokenize("SELECT 1 -- a; b")
+    assert [t.text for t in toks] == ["SELECT", "1", ""]
+    assert toks[-1].ws == " -- a; b"
+    for sql in ["SELECT 1 -- a; b", "SELECT a /* x\n y */", "SELECT 1 ", "a /* open"]:
+        assert "".join(t.ws + t.text for t in tokenize(sql)) == sql
+
+
+def test_prepare_response_comments_are_not_sql():
+    """Comments never decide where a statement ends or what kind it is: a
+    leading ``--`` comment or ``/* */`` before an INSERT keeps it an
+    admitted INSERT, and a ``;`` inside a comment does not split."""
     from scalable_data_integration_with_llms_spark.plans.sql_rewrite import (
-        HAVE_SQLGLOT,
-        _replace_table_refs,
-        _replace_table_refs_ast,
+        prepare_response,
+        split_statements,
     )
 
-    if not HAVE_SQLGLOT:
-        pytest.skip("sqlglot not installed in this environment")
-    import sqlglot
+    src, tgt = {"src_t"}, {"tgt_t"}
+    stmts = prepare_response(
+        "-- fill the dim table\nINSERT INTO tgt_t SELECT a FROM src_t;\n"
+        "/* x */ INSERT INTO tgt_t SELECT b FROM src_t;",
+        src, tgt,
+    )
+    assert [(s.kind, s.target_table, s.ignore_reason) for s in stmts] == [
+        ("INSERT", "tgt_t", None),
+        ("INSERT", "tgt_t", None),
+    ]
+    assert stmts[0].sql == "-- fill the dim table\nINSERT INTO pred_tgt_t SELECT a FROM source_src_t"
+    assert stmts[1].sql == "/* x */ INSERT INTO pred_tgt_t SELECT b FROM source_src_t"
+    sql = "INSERT INTO tgt_t SELECT a -- pick a; not b\nFROM src_t"
+    assert split_statements(sql) == [sql]
+    assert split_statements("SELECT 1; /* end; */ -- done;\n") == ["SELECT 1"]
+    (s,) = prepare_response(sql, src, tgt)
+    assert s.admitted and s.sql == (
+        "INSERT INTO pred_tgt_t SELECT a -- pick a; not b\nFROM source_src_t"
+    )
 
-    for sql in _PARITY_CASES:
-        regex_out = sqlglot.parse_one(_replace_table_refs(sql, _PARITY_MAPPING)).sql()
-        ast_out = _replace_table_refs_ast(sql, _PARITY_MAPPING)
-        assert regex_out == ast_out, sql
+
+def test_join_sql_column_named_like_target_table():
+    """Join-overlap SQL is qualified like statements: a column that shares
+    a target table's name is a column, not a table reference."""
+    from scalable_data_integration_with_llms_spark.plans.mapping_engine import (
+        _sub_namespace,
+        join_referenced_tables,
+    )
+
+    tables = {"author": "author string", "book": "title string"}
+    sql = "SELECT author FROM author"
+    assert _sub_namespace(sql, tables, "gold") == "SELECT author FROM gold_author"
+    assert join_referenced_tables(sql, tables) == ["author"]
+    sql = "SELECT book.title, author FROM book JOIN other USING (k)"
+    assert _sub_namespace(sql, tables, "gold") == (
+        "SELECT gold_book.title, author FROM gold_book JOIN other USING (k)"
+    )
+    assert join_referenced_tables(sql, tables) == ["book"]
 
 
 def test_timeout_classification(spark):
@@ -314,6 +359,46 @@ def test_rewrite_map_pk_edge_cases():
     # wrong arity: left untouched
     sql4 = "SELECT map_pk(a, b) FROM t"
     assert rewrite_map_pk(sql4)[0] == sql4
+    # map_pk( inside a string literal or a comment is text, not a call
+    for sql5 in [
+        "SELECT 'map_pk(a, b, c)' AS note FROM t",
+        "SELECT x -- map_pk(a, b, c)\nFROM t /* map_pk(d, e, f) */",
+    ]:
+        assert rewrite_map_pk(sql5) == (sql5, set())
+    assert rewrite_map_pk("SELECT map_pk('a', 'x', ';--') /* map_pk(b, y, y) */") == (
+        "SELECT (SELECT pk_id FROM __mappk_a_x WHERE pk_val = (';--')) /* map_pk(b, y, y) */",
+        {("a", "x")},
+    )
+
+
+def test_bad_map_pk_marks_statement_not_evaluation(spark):
+    """A predicted map_pk call on an unknown table fails THAT statement
+    (ERROR ignore_reason) like any other failing statement; the rest of the
+    script still runs and the evaluation returns."""
+    from scalable_data_integration_with_llms_spark.plans.mapping_engine import (
+        MappingEngine,
+        MappingScenario,
+    )
+
+    src = spark.createDataFrame([("a", 1), ("b", 2), ("c", 3)], "name string, v int")
+    good = "INSERT INTO t_out SELECT name, v FROM t_src WHERE v > 1;"
+
+    def evaluate(predicted):
+        scenario = MappingScenario(
+            source_tables={"t_src": src},
+            target_tables={"t_out": "name string, v int", "t_pk": "id bigint"},
+            gold_sql="INSERT INTO t_out SELECT name, v FROM t_src;",
+            meaningful_cols={"t_out": ["name", "v"], "t_pk": ["id"]},
+        )
+        return MappingEngine(spark, scenario).evaluate(predicted)
+
+    base = evaluate(good)
+    res = evaluate("INSERT INTO t_pk SELECT map_pk('nosuch', 'x', name) FROM t_src;\n" + good)
+    pred = res.statement_log[-2:]
+    assert pred[0].ignore_reason.startswith("ERROR: map_pk references unknown source table")
+    assert pred[1].admitted
+    by = {c.table: (c.tp, c.fp, c.fn) for c in res.counts}
+    assert by["t_out"] == {c.table: (c.tp, c.fp, c.fn) for c in base.counts}["t_out"] == (2, 0, 1)
 
 
 def test_transpile_sqlite_to_spark():

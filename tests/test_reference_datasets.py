@@ -1,25 +1,36 @@
 """Parity against the reference's OWN datasets (read-only data, not code):
 the S1 JSON scan + S2 catalog flatten run on the actual ehr (52 MIMIC↔OMOP
 cases) and synthea (12 cases) files, checking the invariants the
-reference's pipeline relies on."""
+reference's pipeline relies on.  The files are the byte-identical copies
+vendored under ``fixtures/``; their sha256 is pinned so a drifted copy
+fails here instead of silently changing what the tests check."""
 
+import hashlib
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
+from scalable_data_integration_with_llms_spark import fixtures
 from scalable_data_integration_with_llms_spark.sources.dataset_json import (
     catalog_from_cases,
     load_dataset_json,
 )
 
-_DATA = "/root/reference/Stable Schema Matching/data"
-EHR = f"{_DATA}/ehr/ehr_dataset.json"
-SYNTHEA = f"{_DATA}/synthea/synthea_dataset.json"
+_DATA = os.path.dirname(fixtures.__file__)
+EHR = os.path.join(_DATA, "ehr_dataset.json")
+SYNTHEA = os.path.join(_DATA, "synthea_dataset.json")
+_SHA256 = {
+    EHR: "53b66072dd334db00737b6f3b2c0204cad73b94e452de698be2047af9662bb1a",
+    SYNTHEA: "9ad8f6bf0dbbd45e0d1a6adbed46aaeac6a0e6559b881b030cd84ef098131de1",
+}
 
-pytestmark = pytest.mark.skipif(
-    not os.path.exists(EHR), reason="reference datasets not present"
-)
+
+@pytest.fixture(scope="module", autouse=True)
+def _datasets_are_the_reference_bytes():
+    for path, want in _SHA256.items():
+        with open(path, "rb") as f:
+            assert hashlib.sha256(f.read()).hexdigest() == want, path
 
 
 def test_case_counts(spark):

@@ -93,12 +93,12 @@ def test_join_referenced_tables_word_boundary():
 
 
 def test_join_referenced_tables_matches_rewrite_semantics():
-    """ADVICE r8: the persist heuristic must use the SAME matcher as
-    _replace_table_refs — a name inside a string literal or already
+    """ADVICE r8: the persist heuristic must agree with the namespace
+    rewrite (qualify_sql) — a name inside a string literal or already
     namespace-qualified is not a reference the rewrite would touch, so it
     must not drive a persist either."""
     from scalable_data_integration_with_llms_spark.plans.mapping_engine import join_referenced_tables
-    from scalable_data_integration_with_llms_spark.plans.sql_rewrite import _replace_table_refs
+    from scalable_data_integration_with_llms_spark.plans.sql_ast import qualify_sql
 
     tables = ["t_a", "t_b", "t_c"]
     sql = "SELECT 't_a ignored' AS lbl, x FROM t_b JOIN other.t_c USING (k)"
@@ -106,7 +106,7 @@ def test_join_referenced_tables_matches_rewrite_semantics():
     assert got == ["t_b"]
     # agreement property: a table is selected iff the rewrite changes the SQL
     for t in tables:
-        rewritten = _replace_table_refs(sql, {t: f"ns_{t}"})
+        rewritten = qualify_sql(sql, {t: f"ns_{t}"})
         assert (t in got) == (rewritten != sql), (t, rewritten)
 
 

@@ -25,7 +25,8 @@ _MATCHING = f"{_REF}/Stable Schema Matching/prompt"
 _MAPPING = f"{_REF}/Schema Mapping/DatabaseUtils"
 
 pytestmark = pytest.mark.skipif(
-    not os.path.exists(_MATCHING), reason="reference checkout not present"
+    not os.path.exists(_MATCHING),
+    reason="parses the reference's Python source, which this repository does not vendor",
 )
 
 

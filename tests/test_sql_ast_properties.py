@@ -1,17 +1,17 @@
 """Property tests for the built-in SQL qualification backend: generated
 admissible statements (the LLM-emitted shapes the mapping engine admits)
-must rewrite identically to the regex reference, preserve literals and
-comments byte-for-byte, and be idempotent."""
+must rewrite identically to the regex reference in ``regex_qualify.py``,
+preserve literals and comments byte-for-byte, and be idempotent."""
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from regex_qualify import _replace_table_refs
 
 from scalable_data_integration_with_llms_spark.plans.sql_ast import (
     qualify_sql,
     tokenize,
     transpile_sqlite_to_spark,
 )
-from scalable_data_integration_with_llms_spark.plans.sql_rewrite import _replace_table_refs
 
 MAPPING = {"src_t": "source_src_t", "other_t": "source_other_t", "tgt_t": "pred_tgt_t"}
 
